@@ -3052,21 +3052,19 @@ object SparkEntry {
 
   /** q98's build-then-append PQ index: codebooks trained on the 90%
     * seed slice, the held-out 10% encoded against the FROZEN
-    * codebooks and appended (Pq.appendToPqIndex). READY marker as in
+    * codebooks and appended (Pq.appendToPqIndex). READY-fenced as in
     * [[ivfAppendedIndexTable]] — build and append both write the
     * codes table, so its _SUCCESS cannot fence the whole artifact. */
   private[graft] def pqAppendedIndexTable(s: SparkSession, dir: String,
                                           force: Boolean = false): (graft.catalog.ParquetCatalog, String) = {
     val cat = new graft.catalog.ParquetCatalog(artifactRoot)
     val prefix = "pqa_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val ready = new java.io.File(artifactRoot, s"${prefix}_READY")
-    if (force || !ready.exists()) {
+    readyFenced(prefix, force) {
       val e = embeddings(s, dir)
       graft.sim.Pq.buildPqIndex(e.filter(col("vec_id") % 10 =!= 0), cat,
         prefix, m = 16, k = 64, dim = 64, iters = 2)
       graft.sim.Pq.appendToPqIndex(e.filter(col("vec_id") % 10 === 0), cat,
         prefix, m = 16, dim = 64)
-      ready.createNewFile()
     }
     (cat, prefix)
   }
@@ -3104,26 +3102,36 @@ object SparkEntry {
 
   /** q78's build-then-append index. The lists' `_SUCCESS` marker
     * cannot fence this artifact (build AND append both write it, so
-    * it appears after the build — before the index is whole); a
-    * separate READY marker is created only once the append lands.
-    * A crash anywhere before that re-enters here, and the rebuild is
-    * idempotent: `buildIvfIndex` overwrites the lists, discarding any
-    * partial append before it is replayed. */
+    * it appears after the build — before the index is whole); it is
+    * READY-fenced instead ([[readyFenced]]). A crash anywhere before
+    * the marker re-enters here, and the rebuild is idempotent:
+    * `buildIvfIndex` overwrites the lists, discarding any partial
+    * append before it is replayed. */
   private[graft] def ivfAppendedIndexTable(s: SparkSession, dir: String,
                                            force: Boolean = false): (graft.catalog.ParquetCatalog, String) = {
     val cat = new graft.catalog.ParquetCatalog(artifactRoot)
     val prefix = "ivfa_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val ready = new java.io.File(artifactRoot, s"${prefix}_READY")
-    if (force || !ready.exists()) {
+    readyFenced(prefix, force) {
       val e = embeddings(s, dir)
       // the base slice keeps vec_ids 0..15, so its default centroids
       // equal the full corpus' first-16 seed — the oracle's quantizer
       graft.sim.Ann.buildIvfIndex(e.filter(col("vec_id") < 100), cat,
         prefix, nCentroids = 16)
       graft.sim.Ann.appendToIvfIndex(e.filter(col("vec_id") >= 100), cat, prefix)
-      ready.createNewFile()
     }
     (cat, prefix)
+  }
+
+  /** `<prefix>_READY` marks a build-then-append artifact whole. `build`
+    * runs when forced or unmarked, the marker deleted first: a rebuild
+    * that dies midway leaves no stale marker vouching for it. */
+  private[graft] def readyFenced(prefix: String, force: Boolean)(build: => Unit): Unit = {
+    val ready = new java.io.File(artifactRoot, s"${prefix}_READY")
+    if (force || !ready.exists()) {
+      ready.delete()
+      build
+      ready.createNewFile()
+    }
   }
 
   /** q74's declared budgets — src2 upsamples (~2.7 supplies), src5

@@ -206,7 +206,7 @@ final class ParquetCatalog(val root: String) extends TableCatalog {
   * MySQL, platinum.py:31-39 SQL Server). Backed by stock Spark JDBC;
   * round-tripped in CI against embedded Derby (JdbcCatalogSpec) — the
   * MySQL / SQL Server swap is a URL + driver property, no code change,
-  * and `Pipeline` is catalog-agnostic either way.
+  * and `NycPipeline` is catalog-agnostic either way.
   */
 final class JdbcCatalog(url: String, props: java.util.Properties) extends TableCatalog {
   override def read(spark: SparkSession, table: String): DataFrame =

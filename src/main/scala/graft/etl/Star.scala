@@ -22,11 +22,14 @@ object Star {
   /** J3 + F7 + P5: full dim upsert step — detect new keys, label them
     * with a default name (reference fills 'Unknown ...', gold.py:101,
     * 160,218), drop the sentinel key (gold.py:104,163,220), and return
-    * rows to append. */
+    * rows to append. The key is cast to the dim's own key type: an
+    * appended part file whose key type differs from the table's makes
+    * every later read depend on which file the schema is taken from. */
   def dimUpsert(fresh: DataFrame, dim: DataFrame, key: String,
                 nameCol: String, defaultName: Column,
                 sentinel: Option[Column] = None): DataFrame = {
     val novel = newKeys(fresh, dim.select(key), key)
+      .withColumn(key, col(key).cast(dim.schema(key).dataType))
     val labeled = novel.withColumn(nameCol, defaultName)
     sentinel.fold(labeled)(s => labeled.filter(col(key) =!= s))
   }

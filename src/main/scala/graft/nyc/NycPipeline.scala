@@ -153,12 +153,17 @@ object NycPipeline {
     ensureDims(spark, cfg)
     val trips = monthSilver(spark, cfg, month)
     upsertDims(spark, cfg, trips)
-    val fact = Nyc.factBuild(trips,
-      cfg.catalog.read(spark, "dim_date"),
-      cfg.catalog.read(spark, "dim_type"), None)
-    cfg.catalog.replacePartitions(fact.withColumn("month_key", lit(month)),
-      "fact_nyc", partitionBy = Seq("month_key"))
+    replaceMonthFact(cfg, month, trips,
+      cfg.catalog.read(spark, "dim_date"), cfg.catalog.read(spark, "dim_type"))
   }
+
+  /** The month's fact rows from its silver trips, replacing exactly its
+    * `month_key` partition — shared by [[goldMonth]] and [[runYear]]. */
+  private def replaceMonthFact(cfg: Config, month: String, trips: DataFrame,
+                               dateDim: DataFrame, typeDim: DataFrame): Unit =
+    cfg.catalog.replacePartitions(
+      Nyc.factBuild(trips, dateDim, typeDim, None).withColumn("month_key", lit(month)),
+      "fact_nyc", partitionBy = Seq("month_key"))
 
   /** Watermark-incremental fact APPEND (the reference's
     * insert_fact_table contract, gold.py:256-330, R3 fixed — see the
@@ -195,10 +200,7 @@ object NycPipeline {
     // no second pass over the month, and the watermark only sees rows
     // that survived the calendar prune (a 2024-dated outlier must not
     // fence out genuine 2023 arrivals behind it)
-    val factPlus = Nyc.factBuild(Star.newerThan(trips, "pickup_datetime", wm),
-        cfg.catalog.read(spark, "dim_date"),
-        cfg.catalog.read(spark, "dim_type"), None,
-        keep = Seq("pickup_datetime"))
+    val factPlus = factWithPickup(spark, cfg, trips, wm)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       if (!factPlus.isEmpty) {
@@ -217,6 +219,13 @@ object NycPipeline {
 
   private val PendingTable = "fact_nyc_append_pending"
 
+  /** `trips`' fact rows newer than `wm`, pickup timestamp kept for the
+    * watermark — shared by [[goldAppend]] and its recovery. */
+  private def factWithPickup(spark: SparkSession, cfg: Config, trips: DataFrame,
+                             wm: Option[Any]): DataFrame =
+    Nyc.factBuild(trips, cfg.catalog.read(spark, "dim_date"),
+      cfg.catalog.read(spark, "dim_type"), wm, keep = Seq("pickup_datetime"))
+
   /** Crash recovery for [[goldAppend]]'s two-write commit: a leftover
     * intent marker means a prior run died somewhere between declaring
     * the append and dropping the marker — the month's partition may
@@ -230,10 +239,7 @@ object NycPipeline {
     if (cfg.catalog.exists(spark, PendingTable)) {
       val m = cfg.catalog.read(spark, PendingTable).head().getString(0)
       goldMonth(spark, cfg, m)
-      val monthMax = Nyc.factBuild(monthSilver(spark, cfg, m),
-          cfg.catalog.read(spark, "dim_date"),
-          cfg.catalog.read(spark, "dim_type"), None,
-          keep = Seq("pickup_datetime"))
+      val monthMax = factWithPickup(spark, cfg, monthSilver(spark, cfg, m), None)
         .agg(max(col("pickup_datetime")).as("max_pickup"))
       val merged =
         if (cfg.catalog.exists(spark, WmTable))
@@ -303,7 +309,7 @@ object NycPipeline {
     * reference's per-month upsert cadence. */
   def runYear(spark: SparkSession, cfg: Config,
               months: Seq[String] = months2023): Unit = {
-    inPool(poolWidth, months) { m =>
+    inPool(months) { m =>
       bronzeMonth(spark, cfg, m)
       silverMonth(spark, cfg, m)
     }
@@ -311,28 +317,22 @@ object NycPipeline {
     upsertDims(spark, cfg, cfg.catalog.read(spark, "silver_trips"))
     val dd = cfg.catalog.read(spark, "dim_date")
     val dt = cfg.catalog.read(spark, "dim_type")
-    inPool(poolWidth, months) { m =>
-      val fact = Nyc.factBuild(monthSilver(spark, cfg, m), dd, dt, None)
-      cfg.catalog.replacePartitions(fact.withColumn("month_key", lit(m)),
-        "fact_nyc", partitionBy = Seq("month_key"))
-    }
+    inPool(months)(m => replaceMonthFact(cfg, m, monthSilver(spark, cfg, m), dd, dt))
     platinum(spark, cfg)
   }
 
-  /** Backfill pool width: how many months are in flight at once.
-    * Default 6, A/B-measured on the 10× year (3 → 6 cut both gen and
-    * pipeline ~12%; 8 ≈ 6): each month-unit here is a short
-    * driver-planning + commit-bound job, so more in flight pays until
-    * driver-side planning serializes. On a real cluster, size it to
-    * the executor slack left by one month's write (the guide's
-    * 2-3-jobs advice) — overridable via -Dgraft.nyc.poolWidth. */
-  private def poolWidth: Int =
-    sys.props.getOrElse("graft.nyc.poolWidth", "6").toInt
+  /** Driver pool width: how many months are in flight at once.
+    * A/B-measured on the 10× year (3 → 6 cut both gen and pipeline
+    * ~12%; 8 ≈ 6): each month-unit here is a short driver-planning +
+    * commit-bound job, so more in flight pays until driver-side
+    * planning serializes. On a real cluster, size it to the executor
+    * slack left by one month's write (the guide's 2-3-jobs advice). */
+  private val PoolWidth = 6
 
-  /** Run `f` over `items` from a fixed pool of `n` driver threads,
-    * propagating the first failure after all work settles. */
-  private def inPool[A](n: Int, items: Seq[A])(f: A => Unit): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+  /** Run `f` over `items` from a fixed pool of [[PoolWidth]] driver
+    * threads, propagating the first failure after all work settles. */
+  private[nyc] def inPool[A](items: Seq[A])(f: A => Unit): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(PoolWidth)
     try {
       val futures = items.map(it =>
         pool.submit(new java.util.concurrent.Callable[Unit] {

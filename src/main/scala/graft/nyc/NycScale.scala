@@ -25,30 +25,18 @@ import org.apache.spark.sql.types.NullType
   * before the write, exactly like bronze ingest — parquet cannot store
   * a void column. */
 object NycScale {
-  private def poolWidth: Int =
-    sys.props.getOrElse("graft.nyc.poolWidth", "6").toInt
-
   /** Amplify `months` from `srcDir` into `dstDir` (one
     * `<month>.parquet` DIRECTORY per month — `spark.read.parquet`
     * treats it like the reference's single file). Months are
-    * independent single-write units, so they overlap from a small
-    * driver pool (the same back-fill-the-straggler-tail rationale as
-    * [[NycPipeline.runYear]]). */
+    * independent single-write units, so they overlap from the
+    * backfill's driver pool (the same back-fill-the-straggler-tail
+    * rationale as [[NycPipeline.runYear]]). */
   def amplify(spark: SparkSession, srcDir: String, dstDir: String,
-              months: Seq[String], factor: Int): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(poolWidth)
-    try {
-      months.map { m =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            val raw = spark.read.parquet(s"$srcDir/$m.parquet")
-            val out = amplifyFrame(raw, factor)
-            out.write.mode("overwrite").parquet(s"$dstDir/$m.parquet")
-          }
-        })
-      }.foreach(_.get())
-    } finally pool.shutdown()
-  }
+              months: Seq[String], factor: Int): Unit =
+    NycPipeline.inPool(months) { m =>
+      amplifyFrame(spark.read.parquet(s"$srcDir/$m.parquet"), factor)
+        .write.mode("overwrite").parquet(s"$dstDir/$m.parquet")
+    }
 
   /** The per-frame core: factor copies with per-copy timestamp
     * jitter, as ONE scan + a generator — the k-way self-union form

@@ -47,8 +47,10 @@ class PinsSpec extends SparkTestBase {
       assert(graft.ops.Pins.reliable(docs))
       assert(containmentRows() == localC)
       assert(semanticLosers() == localS)
-    } finally {
-      spark.conf.unset("graft.checkpoint.reliable")
+    } finally spark.conf.unset("graft.checkpoint.reliable")
+    // the shared SparkContext keeps `dir` as its checkpoint dir for the
+    // rest of the JVM, so it is deleted at exit, not under later suites
+    sys.addShutdownHook {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(dir).sorted(
           java.util.Comparator.reverseOrder[java.nio.file.Path]())

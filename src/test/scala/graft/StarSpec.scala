@@ -27,6 +27,13 @@ class StarSpec extends SparkTestBase {
     assert(out.toSet == Set((6, "Unknown")))
   }
 
+  test("dimUpsert returns novel keys in the dim's own key type") {
+    val fresh = Seq(5L, 6L).toDF("k")
+    val out = Star.dimUpsert(fresh, Seq(5).toDF("k"), "k", "name", lit("Unknown"))
+    assert(out.schema("k").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(out.collect().map(_.getInt(0)).toSeq == Seq(6))
+  }
+
   test("upsert is re-run safe: second run inserts nothing") {
     val fresh = Seq(1, 2).toDF("k")
     val dim0 = spark.emptyDataset[Int].toDF("k")
