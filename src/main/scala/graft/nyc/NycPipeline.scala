@@ -1,10 +1,12 @@
 package graft.nyc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.NullType
+import org.apache.spark.sql.types.{NullType, StructField, StructType}
 import graft.catalog.TableCatalog
-import graft.etl.Star
+import graft.etl.{DateDim, Star}
+import graft.ops.Pins
 import graft.sources.Sources
 
 /** The reference's ORCHESTRATION loop, 1:1 — monthly Dagster partitions
@@ -67,9 +69,14 @@ object NycPipeline {
   /** Verbatim monthly ingest into the catalog, type-conformed (see
     * [[conformTypes]]); any NULL-typed column (all-null, pandas-
     * written) is stabilized to double first — parquet cannot store a
-    * void column. Silver's cleanse re-casts what it keeps. */
-  def bronzeMonth(spark: SparkSession, cfg: Config, month: String): Unit = {
-    def ingest(dir: String, table: String): Unit = {
+    * void column. Silver's cleanse re-casts what it keeps.
+    *
+    * Returns the conformed frames it wrote (without `month_key`),
+    * keyed by bronze table, for [[silverMonth]] to cleanse without
+    * reading the bronze table back. */
+  def bronzeMonth(spark: SparkSession, cfg: Config,
+                  month: String): Map[String, DataFrame] = {
+    def ingest(dir: String, table: String): (String, DataFrame) = {
       val raw = spark.read.parquet(s"$dir/$month.parquet")
       // conformTypes FIRST even for NULL-typed columns: an all-null
       // month of a conformed column must land as the conformed type,
@@ -88,9 +95,10 @@ object NycPipeline {
       cfg.catalog.replacePartitions(
         stabilized.withColumn("month_key", lit(month)),
         table, partitionBy = Seq("month_key"))
+      table -> stabilized
     }
-    ingest(cfg.greenDir, "bronze_green")
-    cfg.yellowDir.foreach(ingest(_, "bronze_yellow"))
+    (ingest(cfg.greenDir, "bronze_green") +:
+      cfg.yellowDir.toSeq.map(ingest(_, "bronze_yellow"))).toMap
   }
 
   // ------------------------------------------------------------- silver
@@ -98,11 +106,16 @@ object NycPipeline {
   /** Cleanse the month's bronze partitions to the canonical 17-column
     * trip schema and union green + yellow BY NAME (R1 fix — the
     * reference's positional union throws, gold.py:273). One conformed
-    * `silver_trips` table, partitioned by file month. */
-  def silverMonth(spark: SparkSession, cfg: Config, month: String): Unit = {
+    * `silver_trips` table, partitioned by file month.
+    *
+    * `bronze` is what [[bronzeMonth]] returned for this month; a table
+    * missing from it is read back from the catalog, so called alone
+    * silver reads the bronze table. */
+  def silverMonth(spark: SparkSession, cfg: Config, month: String,
+                  bronze: Map[String, DataFrame] = Map.empty): Unit = {
     def slice(table: String): DataFrame =
-      cfg.catalog.read(spark, table)
-        .filter(col("month_key") === month).drop("month_key")
+      bronze.getOrElse(table, cfg.catalog.read(spark, table)
+        .filter(col("month_key") === month).drop("month_key"))
     val green = Nyc.cleanseGreen(slice("bronze_green"))
     val frames = green +: cfg.yellowDir.toSeq.map(_ =>
       Nyc.cleanseYellow(slice("bronze_yellow")))
@@ -114,56 +127,74 @@ object NycPipeline {
   // --------------------------------------------------------------- gold
 
   /** Seed dimensions once (create_datamart.sql static inserts + the
-    * generated calendar), idempotently. */
+    * generated calendar), idempotently; the missing ones are written
+    * side by side. */
   private def ensureDims(spark: SparkSession, cfg: Config): Unit = {
-    if (!cfg.catalog.exists(spark, "dim_date"))
-      cfg.catalog.overwrite(
-        graft.etl.DateDim.build(spark, cfg.dateStart, cfg.dateEnd), "dim_date")
-    def seed(table: String, df: DataFrame): Unit =
-      if (!cfg.catalog.exists(spark, table)) cfg.catalog.overwrite(df, table)
-    seed("dim_type", Nyc.seedTypes(spark))
-    seed("dim_vendor", Nyc.seedVendors(spark))
-    seed("dim_payment", Nyc.seedPayments(spark))
-    seed("dim_rate", Nyc.seedRates(spark))
+    val missing = Seq[(String, SparkSession => DataFrame)](
+        "dim_date" -> (DateDim.build(_, cfg.dateStart, cfg.dateEnd)),
+        "dim_type" -> Nyc.seedTypes, "dim_vendor" -> Nyc.seedVendors,
+        "dim_payment" -> Nyc.seedPayments, "dim_rate" -> Nyc.seedRates)
+      .filterNot { case (table, _) => cfg.catalog.exists(spark, table) }
+      .map { case (table, seed) => table -> seed(spark) }
+    inPool(missing) { case (table, df) => cfg.catalog.overwrite(df, table) }
   }
+
+  /** The three upsert dims: (table, trip key, dim key, name column). */
+  private val upserted = Seq(
+    ("dim_vendor", "VendorID", "VendorID", "vendorName"),
+    ("dim_payment", "payment_type", "paymentID", "paymentType"),
+    ("dim_rate", "RatecodeID", "RatecodeID", "rateName"))
 
   /** The reference's three dim-upsert assets (gold.py:84-106,144-165,
-    * 202-222): append 'Unknown <key>' rows for keys seen in the month's
-    * trips but absent from the dim. */
+    * 202-222): append 'Unknown <key>' rows for keys seen in the trips
+    * but absent from the dim.
+    *
+    * One scan of `trips` collects all three key sets; each dim's novel
+    * rows are then computed once, collected, and appended if any, the
+    * three dims side by side. The key sets and the novel rows are held
+    * on the driver, which is dim-sized: a key set holds at most the
+    * dim's keys plus the novel ones, and a dimension is small enough
+    * to broadcast — the assumption every star join here makes
+    * ([[Star.joinDim]]). The work is O(trips) for the one scan, O(dim)
+    * after it. */
   private def upsertDims(spark: SparkSession, cfg: Config, trips: DataFrame): Unit = {
-    def up(table: String, tripKey: String, dimKey: String, nameCol: String): Unit = {
-      val dim = cfg.catalog.read(spark, table)
-      val fresh =
-        if (tripKey == dimKey) trips else trips.withColumnRenamed(tripKey, dimKey)
-      val novel = Nyc.dimUpsertRows(fresh, dim, dimKey, nameCol)
-      if (!novel.isEmpty) cfg.catalog.append(novel, table)
+    val seen = trips.select(upserted.map(u => collect_set(col(u._2))): _*).head()
+    inPool(upserted.zipWithIndex) { case ((table, tripKey, dimKey, nameCol), i) =>
+      val keys = spark.createDataFrame(seen.getSeq[Any](i).map(Row(_)).asJava,
+        StructType(Seq(StructField(dimKey, trips.schema(tripKey).dataType))))
+      val novel = Nyc.dimUpsertRows(keys, cfg.catalog.read(spark, table), dimKey, nameCol)
+      val rows = novel.collect()
+      if (rows.nonEmpty)
+        cfg.catalog.append(spark.createDataFrame(rows.toSeq.asJava, novel.schema), table)
     }
-    up("dim_vendor", "VendorID", "VendorID", "vendorName")
-    up("dim_payment", "payment_type", "paymentID", "paymentType")
-    up("dim_rate", "RatecodeID", "RatecodeID", "rateName")
   }
 
-  private def monthSilver(spark: SparkSession, cfg: Config, month: String): DataFrame =
-    cfg.catalog.read(spark, "silver_trips")
-      .filter(col("month_key") === month).drop("month_key")
+  /** `silver_trips`' partitions for `months`, `month_key` kept. */
+  private def silverOf(spark: SparkSession, cfg: Config, months: Seq[String]): DataFrame =
+    cfg.catalog.read(spark, "silver_trips").filter(col("month_key").isin(months: _*))
 
   /** Rebuild-and-replace the month's fact partition — idempotent,
     * watermark-independent (the reference's backfill unit). */
-  def goldMonth(spark: SparkSession, cfg: Config, month: String): Unit = {
-    ensureDims(spark, cfg)
-    val trips = monthSilver(spark, cfg, month)
-    upsertDims(spark, cfg, trips)
-    replaceMonthFact(cfg, month, trips,
-      cfg.catalog.read(spark, "dim_date"), cfg.catalog.read(spark, "dim_type"))
-  }
+  def goldMonth(spark: SparkSession, cfg: Config, month: String): Unit =
+    gold(spark, cfg, Seq(month))
 
-  /** The month's fact rows from its silver trips, replacing exactly its
-    * `month_key` partition — shared by [[goldMonth]] and [[runYear]]. */
-  private def replaceMonthFact(cfg: Config, month: String, trips: DataFrame,
-                               dateDim: DataFrame, typeDim: DataFrame): Unit =
-    cfg.catalog.replacePartitions(
-      Nyc.factBuild(trips, dateDim, typeDim, None).withColumn("month_key", lit(month)),
-      "fact_nyc", partitionBy = Seq("month_key"))
+  /** Dims seeded, then the upsert dims refreshed from the months'
+    * silver BESIDE the fact write that replaces every month's fact
+    * partition — shared by [[goldMonth]] and [[runYear]]. The fact
+    * build reads only `dim_date` and `dim_type`, never an upsert dim,
+    * so the two cannot observe each other. It has no shuffle and
+    * `month_key` is the partition column, so one write covers any
+    * number of months. */
+  private def gold(spark: SparkSession, cfg: Config, months: Seq[String]): Unit = {
+    ensureDims(spark, cfg)
+    val silver = silverOf(spark, cfg, months)
+    inPool(Seq[() => Unit](
+      () => upsertDims(spark, cfg, silver),
+      () => cfg.catalog.replacePartitions(
+        Nyc.factBuild(silver, cfg.catalog.read(spark, "dim_date"),
+          cfg.catalog.read(spark, "dim_type"), None, keep = Seq("month_key")),
+        "fact_nyc", partitionBy = Seq("month_key"))))(_())
+  }
 
   /** Watermark-incremental fact APPEND (the reference's
     * insert_fact_table contract, gold.py:256-330, R3 fixed — see the
@@ -189,7 +220,7 @@ object NycPipeline {
   def goldAppend(spark: SparkSession, cfg: Config, month: String): Unit = {
     ensureDims(spark, cfg)
     recoverPendingAppend(spark, cfg)
-    val trips = monthSilver(spark, cfg, month)
+    val trips = silverOf(spark, cfg, Seq(month))
     upsertDims(spark, cfg, trips)
     val wm =
       if (cfg.catalog.exists(spark, WmTable))
@@ -239,7 +270,7 @@ object NycPipeline {
     if (cfg.catalog.exists(spark, PendingTable)) {
       val m = cfg.catalog.read(spark, PendingTable).head().getString(0)
       goldMonth(spark, cfg, m)
-      val monthMax = factWithPickup(spark, cfg, monthSilver(spark, cfg, m), None)
+      val monthMax = factWithPickup(spark, cfg, silverOf(spark, cfg, Seq(m)), None)
         .agg(max(col("pickup_datetime")).as("max_pickup"))
       val merged =
         if (cfg.catalog.exists(spark, WmTable))
@@ -249,7 +280,7 @@ object NycPipeline {
         else monthMax
       // merged reads WmTable lazily; materialize BEFORE overwriting it
       // (overwrite would otherwise delete its own input mid-plan)
-      val pinned = merged.localCheckpoint(true)
+      val pinned = Pins.pin(merged)
       cfg.catalog.overwrite(pinned, WmTable)
       cfg.catalog.drop(spark, PendingTable)
     }
@@ -258,7 +289,8 @@ object NycPipeline {
   // ----------------------------------------------------------- platinum
 
   /** Refresh both report marts off the accumulated fact (platinum.py:
-    * 61-252), zones attached when a lookup CSV is configured. */
+    * 61-252), zones attached when a lookup CSV is configured; the two
+    * mart writes run side by side. */
   def platinum(spark: SparkSession, cfg: Config,
                compat: Nyc.Compat = Nyc.Compat()): Unit = {
     val fact = cfg.catalog.read(spark, "fact_nyc").drop("month_key")
@@ -267,10 +299,11 @@ object NycPipeline {
       Sources.readCsv(spark, p, Some(Nyc.zoneSchema)))
     def withZones(df: DataFrame): DataFrame =
       zones.fold(df)(z => Nyc.attachZones(df, z))
-    cfg.catalog.overwrite(withZones(Nyc.monthlyReport(fact, dd, compat)),
-      "report_monthly")
-    cfg.catalog.overwrite(withZones(Nyc.weeklyReport(fact, dd, compat)),
-      "report_weekly")
+    inPool(Seq(
+        "report_monthly" -> Nyc.monthlyReport(fact, dd, compat),
+        "report_weekly" -> Nyc.weeklyReport(fact, dd, compat))) {
+      case (table, mart) => cfg.catalog.overwrite(withZones(mart), table)
+    }
   }
 
   // -------------------------------------------------------------- runs
@@ -278,50 +311,49 @@ object NycPipeline {
   /** One month end-to-end — the reference user's "re-run March":
     * idempotent partition rebuild plus mart refresh. */
   def runMonth(spark: SparkSession, cfg: Config, month: String): Unit = {
-    bronzeMonth(spark, cfg, month)
-    silverMonth(spark, cfg, month)
+    silverMonth(spark, cfg, month, bronzeMonth(spark, cfg, month))
     goldMonth(spark, cfg, month)
     platinum(spark, cfg)
   }
 
-  /** A full backfill: every month through bronze/silver/gold with
-    * per-month partition replace, then ONE mart refresh at the end —
-    * the marts aggregate the whole fact, so refreshing them per month
-    * during a backfill would recompute the same aggregation 12 times
-    * over growing input for no observable difference in the final
-    * tables. (The reference, asset-driven, does refresh per partition;
-    * an orchestration cost, not a semantic one.)
+  /** A full backfill: every month through bronze and silver, then gold
+    * and platinum once for the whole set of months — the same tables,
+    * row for row, as [[runMonth]] over the months in order (the marts
+    * aggregate the whole fact, so refreshing them per month would
+    * recompute the same aggregation 12 times over growing input for no
+    * observable difference in the final tables; the reference, asset-
+    * driven, does refresh per partition — an orchestration cost, not a
+    * semantic one). Three phases:
     *
-    * Orchestration (not semantics): months are INDEPENDENT partition
-    * units through bronze → silver and through the fact build (each
-    * writes only its own `month_key` partition; dynamic partition
-    * overwrite stages per job), so the backfill overlaps them from a
-    * small driver thread pool — Spark's scheduler happily runs
-    * concurrent jobs, and the next month's tasks back-fill executors
-    * idled by the current month's straggler tail. The only
-    * cross-month state is the three upsert dims; those are refreshed
-    * ONCE from the whole year's silver between the two pooled phases
-    * — the final dim content is identical to the sequential monthly
-    * upserts (novel keys are a distinct set-difference against the
-    * seed, and the appended row is a pure function of the key), and
-    * the fact build never reads the upsert dims, so fact rows cannot
-    * observe the batching. [[runMonth]] and [[goldAppend]] keep the
-    * reference's per-month upsert cadence. */
+    *  1. Bronze → silver per month, months overlapped from a small
+    *     driver pool ([[inPool]]): each month writes only its own
+    *     `month_key` partitions (dynamic partition overwrite stages
+    *     per job), Spark's scheduler runs concurrent jobs, and the next
+    *     month's tasks back-fill executors idled by the current month's
+    *     straggler tail. Silver cleanses the conformed frames bronze
+    *     hands it rather than reading the bronze table back.
+    *  2. Gold once ([[goldMonth]]'s code over every month): the dims
+    *     seeded side by side, then the three upsert dims refreshed
+    *     from ONE scan of the months' silver while ONE fact write
+    *     replaces every month's partition. The final dim content is
+    *     identical to the sequential monthly upserts (novel keys are a
+    *     distinct set-difference against the seed, and the appended
+    *     row is a pure function of the key), and the fact build never
+    *     reads the upsert dims, so fact rows cannot observe the
+    *     batching.
+    *  3. Platinum once, its two mart writes side by side.
+    *
+    * [[runMonth]] and [[goldAppend]] keep the reference's per-month
+    * upsert cadence. */
   def runYear(spark: SparkSession, cfg: Config,
               months: Seq[String] = months2023): Unit = {
-    inPool(months) { m =>
-      bronzeMonth(spark, cfg, m)
-      silverMonth(spark, cfg, m)
-    }
-    ensureDims(spark, cfg)
-    upsertDims(spark, cfg, cfg.catalog.read(spark, "silver_trips"))
-    val dd = cfg.catalog.read(spark, "dim_date")
-    val dt = cfg.catalog.read(spark, "dim_type")
-    inPool(months)(m => replaceMonthFact(cfg, m, monthSilver(spark, cfg, m), dd, dt))
+    inPool(months)(m => silverMonth(spark, cfg, m, bronzeMonth(spark, cfg, m)))
+    gold(spark, cfg, months)
     platinum(spark, cfg)
   }
 
-  /** Driver pool width: how many months are in flight at once.
+  /** Driver pool width: how many months are in flight at once (the
+    * dim, fact and mart writes the pool also overlaps number 2 to 5).
     * A/B-measured on the 10× year (3 → 6 cut both gen and pipeline
     * ~12%; 8 ≈ 6): each month-unit here is a short driver-planning +
     * commit-bound job, so more in flight pays until driver-side

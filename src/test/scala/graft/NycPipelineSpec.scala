@@ -1,13 +1,17 @@
 package graft
 
 import java.sql.Timestamp
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import graft.catalog.ParquetCatalog
+import graft.catalog.{ParquetCatalog, TableCatalog}
 import graft.nyc.NycPipeline
 
 /** nyc.NycPipeline: the medallion loop (bronze → silver → gold →
@@ -69,11 +73,16 @@ class NycPipelineSpec extends SparkTestBase {
   // the calendar join drops only the 2022 pickup
   private val (silverRows, factRows) = (40L, 39L)
 
-  private def config(): NycPipeline.Config = NycPipeline.Config(s"$srcDir/green",
-    new ParquetCatalog(java.nio.file.Files.createTempDirectory("graft-nyc-wh").toString),
-    yellowDir = Some(s"$srcDir/yellow"))
+  private def warehouse() =
+    new ParquetCatalog(java.nio.file.Files.createTempDirectory("graft-nyc-wh").toString)
+  private def config(catalog: TableCatalog = warehouse()): NycPipeline.Config =
+    NycPipeline.Config(s"$srcDir/green", catalog, yellowDir = Some(s"$srcDir/yellow"))
 
   private lazy val year = { val cfg = config(); NycPipeline.runYear(spark, cfg, months); cfg }
+  /** The same months through the monthly tick, one after another. */
+  private lazy val monthly = {
+    val cfg = config(); months.foreach(NycPipeline.runMonth(spark, cfg, _)); cfg
+  }
   private def read(cfg: NycPipeline.Config, t: String) = cfg.catalog.read(spark, t)
   private def root(cfg: NycPipeline.Config) = cfg.catalog.asInstanceOf[ParquetCatalog].root
   private def monthFact(cfg: NycPipeline.Config, m: String) =
@@ -161,4 +170,83 @@ class NycPipelineSpec extends SparkTestBase {
     NycPipeline.goldAppend(spark, cfg, "2023-02")
     assert(first._1 == 13L && snapshot() == first)
   }
+
+  test("runYear is pure orchestration: every table equals runMonth's over the same months") {
+    for (t <- Seq("bronze_green", "bronze_yellow", "silver_trips", "fact_nyc",
+        "dim_vendor", "dim_payment", "dim_rate", "dim_date", "dim_type",
+        "report_monthly", "report_weekly"))
+      assert(sameRows(read(monthly, t), read(year, t)), t)
+  }
+
+  test("goldAppend recovers a crashed append: month rebuilt, marker gone, watermark kept") {
+    val cfg = config()
+    for (m <- Seq("2023-01", "2023-02")) {
+      NycPipeline.bronzeMonth(spark, cfg, m)
+      NycPipeline.silverMonth(spark, cfg, m)
+      NycPipeline.goldAppend(spark, cfg, m)
+    }
+    def watermark() = read(cfg, "fact_nyc_watermark").head().get(0).toString
+    val before = watermark()
+    // the crash state the intent marker fences: February appended twice,
+    // the run dead before the watermark write and the marker drop
+    cfg.catalog.append(monthFact(cfg, "2023-02"), "fact_nyc",
+      partitionBy = Seq("month_key"))
+    assert(monthFact(cfg, "2023-02").count() == 26L)
+    cfg.catalog.overwrite(Seq("2023-02").toDF("month_key"), "fact_nyc_append_pending")
+    NycPipeline.goldAppend(spark, cfg, "2023-02")
+    assert(sameRows(monthFact(cfg, "2023-02"), monthFact(monthly, "2023-02")))
+    assert(!cfg.catalog.exists(spark, "fact_nyc_append_pending"))
+    assert(watermark() >= before, s"watermark went back from $before")
+    val rows = read(cfg, "fact_nyc").count()
+    NycPipeline.goldAppend(spark, cfg, "2023-02")
+    assert(read(cfg, "fact_nyc").count() == rows)
+  }
+
+  /** Delegates to a fresh warehouse and records when the last
+    * `silver_trips` write returned. `runYear`'s month pool drains
+    * before gold starts, so every job submitted from then on belongs to
+    * the dims, the fact or platinum. */
+  private final class SilverClock extends TableCatalog {
+    private val inner = warehouse()
+    val silverDone = new AtomicLong()
+    def read(s: SparkSession, t: String): DataFrame = inner.read(s, t)
+    def exists(s: SparkSession, t: String): Boolean = inner.exists(s, t)
+    def append(df: DataFrame, t: String, p: Seq[String]): Unit = inner.append(df, t, p)
+    def overwrite(df: DataFrame, t: String, p: Seq[String]): Unit = inner.overwrite(df, t, p)
+    def drop(s: SparkSession, t: String): Unit = inner.drop(s, t)
+    override def supportsPartitionReplace: Boolean = true
+    override def replacePartitions(df: DataFrame, t: String, p: Seq[String]): Unit = {
+      inner.replacePartitions(df, t, p)
+      if (t == "silver_trips") silverDone.accumulateAndGet(System.currentTimeMillis(), math.max)
+    }
+  }
+
+  /** Spark jobs one `runYear` over `ms` submits: (all, after silver). */
+  private def runYearJobs(ms: Seq[String]): (Int, Int) = {
+    val submitted = new ConcurrentLinkedQueue[java.lang.Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = submitted.add(e.time)
+    }
+    val clock = new SilverClock
+    ListenerBusAccess.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      NycPipeline.runYear(spark, config(clock), ms)
+      ListenerBusAccess.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val times = submitted.asScala.map(_.longValue)
+    (times.size, times.count(_ >= clock.silverDone.get))
+  }
+
+  test("runYear's job count: gold and platinum do not grow with the months") {
+    // February carries a novel key for every upsert dim, so both runs append to all three
+    val (totalOne, goldOne) = runYearJobs(Seq("2023-02"))
+    val (total, goldThree) = runYearJobs(months)
+    info(s"jobs (all, after silver): 1 month ($totalOne, $goldOne), 3 months ($total, $goldThree)")
+    assert(goldThree == goldOne, s"jobs after silver: $goldOne for 1 month, $goldThree for 3")
+    assert(total <= JobBudget, s"$total jobs for 3 months")
+  }
+  // the 3-month total measured once gold wrote the fact in one job and
+  // scanned silver once for the dims (73 while both ran per month)
+  private val JobBudget = 57
 }
