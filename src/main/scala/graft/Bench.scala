@@ -19,21 +19,13 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // ONE artifact store shared by this JVM and every BenchChild it
-    // spawns (set BEFORE anything touches SparkEntry's lazy root):
+    // spawns (set BEFORE anything touches Artifacts' lazy root):
     // a child-built pair graph must serve the parent's dependent
     // queries, and a child query must find the parent-built indexes.
     val artifactRoot = sys.props.getOrElseUpdate("graft.artifact.root",
       java.nio.file.Files.createTempDirectory("graft_artifacts_shared_")
         .toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
 
     // ------------------------------------------------ canary sweep
     // state (see BenchCanary's scaladoc for why and the thresholds).

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** One chronic bench row in a FRESH JVM — the subprocess half of the
@@ -35,15 +34,7 @@ object BenchChild {
     val sfDir = args.lift(2).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
 
     def drop(): Unit = {
       spark.catalog.clearCache()
@@ -64,7 +55,7 @@ object BenchChild {
         // force = true: a parent-triggered re-run respawns this child
         // against a store that already holds the artifact — the build
         // must re-execute (overwrite, identical content), not time the
-        // exists-memo's no-op. First spawns see an empty store, where
+        // memo's no-op. First spawns see an empty store, where
         // force is a no-op.
         val build: String => Unit = row match {
           case "q47_build" =>

@@ -246,19 +246,8 @@ object BenchSf1 {
     spark.stop()
   }
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  private def session(): SparkSession =
+    Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
   /** Materialize the replica tiers (idempotent: skips a tier whose
     * `_TIER_OK` marker names the SAME source sfDir AND generation

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan (and optionally time)
   * for named queries — `runMain graft.Explain <sfDir> <query...>`.
   * Used to audit pushdown, broadcast choice, and codegen spans.
@@ -81,15 +79,7 @@ object Explain {
     val names = if (toFile) headline
                 else if (args.length > 1) args.tail.toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("8")
     val sb = new StringBuilder
     def emit(s: String): Unit = if (toFile) { sb ++= s; sb += '\n' }
                                 else println(s)

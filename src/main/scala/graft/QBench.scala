@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time ONE declared query in isolation (3 runs, same conf
   * as [[Bench]]) — `runMain graft.QBench q24_ngram_jaccard_pairs
   * [sfDir]`. Bench's full sweep hides which change moved a single
@@ -11,16 +9,10 @@ object QBench {
     val name = args(0)
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = Sessions.local(cpus,
       // SPARK_GRAFT_AQE=false isolates AQE's per-query-stage job cost
       // for a single query (Bench always runs with AQE on)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.adaptive.enabled" -> sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
     def once(): Double = {
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()

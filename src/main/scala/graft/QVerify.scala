@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump ONE declared query's result to parquet with the same
   * session conf as [[Verify]] — `runMain graft.QVerify q76_ann_int8
   * [sfDir] [outDir]` — so a new oracle can be iterated against
@@ -12,14 +10,8 @@ object QVerify {
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.01")
     val out = args.lift(2).getOrElse("/tmp/graft_qverify")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus,
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
     SparkEntry.queries(name)(spark, dir).coalesce(1).write
       .mode("overwrite").parquet(s"$out/$name")
     // a one-entry oracle_sql.json so tools/check.py runs on this dir

@@ -302,14 +302,7 @@ object RecallReport {
     require(!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(out)),
       s"'$out' is a directory — pass the report FILE path; " +
         s"measurement scales are fixed to ${specScales.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("8")
     // table rows are built OUTSIDE any stripMargin template: interpolated
     // multi-line blocks lose each row's leading '|' to margin stripping
     val tableHeader =

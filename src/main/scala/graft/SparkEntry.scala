@@ -278,85 +278,46 @@ object SparkEntry {
        |  FROM nv),
        |p AS (${Jl.projectionSql(jlSigns, "ql")})""".stripMargin
 
-  /** Per-JVM artifact catalog for queries that demonstrate the
-    * medallion materialize-once shape: the similarity-pair graph is an
-    * expensive artifact (hours at 100 TB), so the pipeline computes it
-    * ONCE, persists it, and every consumer — component resolution,
-    * dedup gates, audits — reads the tiny (id_a, id_b, jaccard) table
-    * instead of re-running the join. Scoped to this JVM (a fresh
-    * process always recomputes), keyed by source dir, so reuse can
-    * never serve one scale factor's graph to another. The
-    * `graft.artifact.root` system property overrides the per-JVM temp
-    * dir — set ONLY by [[Bench]] so the fresh child JVMs it spawns for
-    * the chronic rows share one artifact store with the parent sweep
-    * (a child-built pair graph must serve the parent's dependent
-    * queries); everything else keeps the recompute-per-process
-    * default. */
-  private lazy val artifactRoot: String =
-    sys.props.get("graft.artifact.root") match {
-      case Some(p) =>
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
-        p
-      case None =>
-        java.nio.file.Files.createTempDirectory("graft_artifacts_").toString
-    }
-  // The `force` flag on every *Table/artifact build below bypasses the
-  // exists-memo and rebuilds unconditionally (every build writes in
-  // overwrite mode, so a forced rebuild is idempotent). Only Bench's
-  // build ROWS pass it: a canary/value-triggered re-run of a build row
-  // must re-execute the build, not time the memo's no-op — without
-  // force, build rows were the one row class contention could inflate
-  // with no honest re-measurement possible (r12 q147_build 97.7 s vs
-  // 10.3 isolated; r14 76.4 s vs 12.4 committed). Query-side callers
-  // keep the memoized default.
+  /** The similarity-pair graph as a build-once [[Artifacts]] table:
+    * the pipeline computes it ONCE, and every consumer — component
+    * resolution, dedup gates, audits — reads the tiny (id_a, id_b,
+    * jaccard) table instead of re-running the join. */
   private[graft] def pairGraphTable(s: SparkSession, dir: String,
                                     threshold: Double,
-                                    force: Boolean = false): (graft.catalog.ParquetCatalog, String) = {
-    val cat = new graft.catalog.ParquetCatalog(artifactRoot)
+                                    force: Boolean = false): (graft.catalog.ParquetCatalog, String) =
     // round, not truncate: (0.29*100).toInt == 28 in binary64, which
     // would collide with threshold 0.28's graph and silently serve
     // pairs built at the wrong cutoff
-    val table = "dup_pairs_" + dir.replaceAll("[^A-Za-z0-9.]", "_") +
-      "_t" + math.round(threshold * 1000)
-    if (force || !cat.exists(s, table))
+    Artifacts.table(s"dup_pairs_${Artifacts.key(dir)}_t${math.round(threshold * 1000)}",
+        force) { (cat, table) =>
       graft.dedup.Curation.materializePairs(documents(s, dir), "doc_id", "text",
         cat, table, ngramN = 5, threshold = threshold)
-    (cat, table)
-  }
+    }
 
   /** q89's standing assignment: components of the corpus-only
     * (doc_id % 10 != 0) char-5-gram pair graph at 0.4 — the state a
-    * daily-ingest pipeline carries between batches, materialized once
-    * per (JVM, source dir) like the pair graph itself. */
+    * daily-ingest pipeline carries between batches, built once like
+    * the pair graph itself. */
   private[graft] def baseComponentsTable(s: SparkSession, dir: String,
-                                         force: Boolean = false): (graft.catalog.ParquetCatalog, String) = {
-    val cat = new graft.catalog.ParquetCatalog(artifactRoot)
-    val table = "base_components_" + dir.replaceAll("[^A-Za-z0-9.]", "_") +
-      "_t400"
-    if (force || !cat.exists(s, table)) {
+                                         force: Boolean = false): (graft.catalog.ParquetCatalog, String) =
+    Artifacts.table(s"base_components_${Artifacts.key(dir)}_t400", force) { (cat, table) =>
       val corpus = documents(s, dir).filter(col("doc_id") % 10 =!= 0)
         .select(col("doc_id"), Dedup.charNgrams(col("text"), 5).as("set"))
       val pairs = Dedup.exactSimilarityPairs(corpus, "doc_id", threshold = 0.4)
       cat.overwrite(
         Dedup.connectedComponents(pairs.select("id_a", "id_b")), table)
     }
-    (cat, table)
-  }
 
   /** q90's persisted prefix index over the corpus side of the q64
-    * split, built once per (JVM, source dir). */
+    * split. */
   private[graft] def prefixIndexTable(s: SparkSession, dir: String,
-                                      force: Boolean = false): (graft.catalog.ParquetCatalog, String) = {
-    val cat = new graft.catalog.ParquetCatalog(artifactRoot)
-    val table = "prefix_index_" + dir.replaceAll("[^A-Za-z0-9.]", "_") +
-      "_t400"
-    if (force || !cat.exists(s, table))
+                                      force: Boolean = false): (graft.catalog.ParquetCatalog, String) =
+    Artifacts.table(s"prefix_index_${Artifacts.key(dir)}_t400", force) { (cat, table) =>
       Dedup.buildPrefixIndex(
         documents(s, dir).filter(col("doc_id") % 10 =!= 0)
           .select(col("doc_id"), Dedup.charNgrams(col("text"), 5).as("set")),
         "doc_id", threshold = 0.4, cat, table)
-    (cat, table)
-  }
+    }
 
   /** The q68 pivot's explicit value set — ONE list consumed by both
     * the Spark query and its oracle builder, so the two column sets
@@ -2626,10 +2587,7 @@ object SparkEntry {
     // steady-state read.
     "q72_jsonl_roundtrip" -> ((s, dir) => {
       val docs = documents(s, dir)
-      val out = jsonlDir(dir)
-      if (!new java.io.File(out, "_SUCCESS").exists())
-        graft.sources.Sources.writeJson(docs, out)
-      graft.sources.Sources.readJson(s, out, Some(docs.schema))
+      graft.sources.Sources.readJson(s, jsonlExport(s, dir), Some(docs.schema))
     }),
 
     // Span-level decontamination (Contamination.removeSpans): q44's
@@ -3011,18 +2969,14 @@ object SparkEntry {
     }),
   )
 
-  /** q84's per-(JVM, source-dir) persisted corpus bloom — built once,
-    * like the pair graph and the IVF index. */
+  /** q84's persisted corpus bloom. */
   private[graft] def bloomIndexTable(s: SparkSession, dir: String,
-                                     force: Boolean = false): (graft.catalog.ParquetCatalog, String) = {
-    val cat = new graft.catalog.ParquetCatalog(artifactRoot)
-    val table = "bloom_fp_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-    if (force || !cat.exists(s, table))
+                                     force: Boolean = false): (graft.catalog.ParquetCatalog, String) =
+    Artifacts.table("bloom_fp_" + Artifacts.key(dir), force) { (cat, table) =>
       graft.ops.BloomGate.buildBloomIndex(
         documents(s, dir).withColumn("fp", TF.fingerprint(col("text"))),
         "fp", cat, table, expectedItems = 65536L)
-    (cat, table)
-  }
+    }
 
   /** q81's split declaration — one constant consumed by both the
     * Spark query and its oracle so the cut literals cannot drift. */
@@ -3034,84 +2988,49 @@ object SparkEntry {
     * drift. */
   private val temperatureTotalBudget = 26000L
 
-  /** q77's per-(JVM, source-dir) persisted IVF index — built once,
-    * like the pair graph. */
-  /** q96/q97's persisted PQ index (sim.Pq.buildPqIndex) — same
-    * build-once artifact discipline as [[ivfIndexTable]]; the codes
-    * table is written last, so its _SUCCESS fences the whole index. */
+  /** q96/q97's persisted PQ index (sim.Pq.buildPqIndex). */
   private[graft] def pqIndexTable(s: SparkSession, dir: String,
-                                  force: Boolean = false): (graft.catalog.ParquetCatalog, String) = {
-    val cat = new graft.catalog.ParquetCatalog(artifactRoot)
-    val prefix = "pq_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-    if (force || !new java.io.File(
-        new java.io.File(artifactRoot, s"${prefix}_codes"), "_SUCCESS").exists())
+                                  force: Boolean = false): (graft.catalog.ParquetCatalog, String) =
+    Artifacts.table("pq_" + Artifacts.key(dir), force) { (cat, prefix) =>
       graft.sim.Pq.buildPqIndex(embeddings(s, dir), cat, prefix,
         m = 16, k = 64, dim = 64, iters = 2)
-    (cat, prefix)
-  }
+    }
 
   /** q98's build-then-append PQ index: codebooks trained on the 90%
     * seed slice, the held-out 10% encoded against the FROZEN
-    * codebooks and appended (Pq.appendToPqIndex). READY-fenced as in
-    * [[ivfAppendedIndexTable]] — build and append both write the
-    * codes table, so its _SUCCESS cannot fence the whole artifact. */
+    * codebooks and appended (Pq.appendToPqIndex). */
   private[graft] def pqAppendedIndexTable(s: SparkSession, dir: String,
-                                          force: Boolean = false): (graft.catalog.ParquetCatalog, String) = {
-    val cat = new graft.catalog.ParquetCatalog(artifactRoot)
-    val prefix = "pqa_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-    readyFenced(prefix, force) {
+                                          force: Boolean = false): (graft.catalog.ParquetCatalog, String) =
+    Artifacts.table("pqa_" + Artifacts.key(dir), force) { (cat, prefix) =>
       val e = embeddings(s, dir)
       graft.sim.Pq.buildPqIndex(e.filter(col("vec_id") % 10 =!= 0), cat,
         prefix, m = 16, k = 64, dim = 64, iters = 2)
       graft.sim.Pq.appendToPqIndex(e.filter(col("vec_id") % 10 === 0), cat,
         prefix, m = 16, dim = 64)
     }
-    (cat, prefix)
-  }
 
-  /** q107's persisted inverted index, memoized per (JVM, dir) like
-    * every index artifact here. Meta is written AFTER postings, so
-    * its _SUCCESS implies the whole index committed. */
+  /** q107's persisted inverted index. */
   private[graft] def invertedIndexTable(s: SparkSession, dir: String,
-                                        force: Boolean = false): (graft.catalog.ParquetCatalog, String) = {
-    val cat = new graft.catalog.ParquetCatalog(artifactRoot)
-    val prefix = "inv_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-    if (force || !new java.io.File(
-        new java.io.File(artifactRoot, s"${prefix}_meta"), "_SUCCESS").exists())
+                                        force: Boolean = false): (graft.catalog.ParquetCatalog, String) =
+    Artifacts.table("inv_" + Artifacts.key(dir), force) { (cat, prefix) =>
       graft.text.Retrieval.buildIndex(documents(s, dir), "doc_id", "text",
         cat, prefix, nBuckets = 64)
-    (cat, prefix)
-  }
+    }
 
+  /** q77's persisted IVF index. */
   private[graft] def ivfIndexTable(s: SparkSession, dir: String,
-                                   force: Boolean = false): (graft.catalog.ParquetCatalog, String) = {
-    val cat = new graft.catalog.ParquetCatalog(artifactRoot)
-    val prefix = "ivf_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-    // completeness = the lists' _SUCCESS marker, not bare directory
-    // existence: a build that died mid-write leaves the directory
-    // behind without the marker, and must rebuild rather than wedge
-    // every later call on a half-written index (q72's jsonl artifact
-    // guards the same window). Lists are written AFTER centroids, so
-    // their marker implies the whole index committed.
-    if (force || !new java.io.File(
-        new java.io.File(artifactRoot, s"${prefix}_lists"), "_SUCCESS").exists())
+                                   force: Boolean = false): (graft.catalog.ParquetCatalog, String) =
+    Artifacts.table("ivf_" + Artifacts.key(dir), force) { (cat, prefix) =>
       graft.sim.Ann.buildIvfIndex(embeddings(s, dir), cat, prefix,
         nCentroids = 16)
-    (cat, prefix)
-  }
+    }
 
-  /** q78's build-then-append index. The lists' `_SUCCESS` marker
-    * cannot fence this artifact (build AND append both write it, so
-    * it appears after the build — before the index is whole); it is
-    * READY-fenced instead ([[readyFenced]]). A crash anywhere before
-    * the marker re-enters here, and the rebuild is idempotent:
+  /** q78's build-then-append IVF index. A rebuild is idempotent:
     * `buildIvfIndex` overwrites the lists, discarding any partial
     * append before it is replayed. */
   private[graft] def ivfAppendedIndexTable(s: SparkSession, dir: String,
-                                           force: Boolean = false): (graft.catalog.ParquetCatalog, String) = {
-    val cat = new graft.catalog.ParquetCatalog(artifactRoot)
-    val prefix = "ivfa_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-    readyFenced(prefix, force) {
+                                           force: Boolean = false): (graft.catalog.ParquetCatalog, String) =
+    Artifacts.table("ivfa_" + Artifacts.key(dir), force) { (cat, prefix) =>
       val e = embeddings(s, dir)
       // the base slice keeps vec_ids 0..15, so its default centroids
       // equal the full corpus' first-16 seed — the oracle's quantizer
@@ -3119,20 +3038,6 @@ object SparkEntry {
         prefix, nCentroids = 16)
       graft.sim.Ann.appendToIvfIndex(e.filter(col("vec_id") >= 100), cat, prefix)
     }
-    (cat, prefix)
-  }
-
-  /** `<prefix>_READY` marks a build-then-append artifact whole. `build`
-    * runs when forced or unmarked, the marker deleted first: a rebuild
-    * that dies midway leaves no stale marker vouching for it. */
-  private[graft] def readyFenced(prefix: String, force: Boolean)(build: => Unit): Unit = {
-    val ready = new java.io.File(artifactRoot, s"${prefix}_READY")
-    if (force || !ready.exists()) {
-      ready.delete()
-      build
-      ready.createNewFile()
-    }
-  }
 
   /** q74's declared budgets — src2 upsamples (~2.7 supplies), src5
     * lands exactly where its remainder prefix ends mid-domain, src9
@@ -3145,37 +3050,30 @@ object SparkEntry {
   private val mixtureBudgets: Map[String, Long] =
     Map("src0" -> 400L, "src1" -> 250L, "src7" -> 600L, "src13" -> 100L)
 
-  /** q72's per-(JVM, source-dir) JSONL dump location (under the same
-    * temp artifact root as the pair graphs). */
-  private def jsonlDir(dir: String): String =
-    artifactRoot + "/jsonl_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
+  /** q72's JSONL dump of the documents table, written once. */
+  private def jsonlExport(s: SparkSession, dir: String): String = {
+    val name = "jsonl_" + Artifacts.key(dir)
+    Artifacts.memo(name)(
+      graft.sources.Sources.writeJson(documents(s, dir), Artifacts.path(name)))
+    Artifacts.path(name)
+  }
 
-  /** q167's per-(JVM, source-dir) ORC dump location (same artifact
-    * discipline as [[jsonlDir]]). */
-  private def orcDir(dir: String): String =
-    artifactRoot + "/orc_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-
-  /** q167's artifact build, exposed so Bench can time the ORC export
-    * as an explicit `q167_build` row. */
+  /** q167's ORC dump of the documents table, exposed so Bench can time
+    * the export as an explicit `q167_build` row. */
   private[graft] def orcExport(s: SparkSession, dir: String,
                                force: Boolean = false): String = {
-    val out = orcDir(dir)
-    if (force || !new java.io.File(out, "_SUCCESS").exists())
-      graft.sources.Sources.writeOrc(documents(s, dir), out)
-    out
+    val name = "orc_" + Artifacts.key(dir)
+    Artifacts.memo(name, force)(
+      graft.sources.Sources.writeOrc(documents(s, dir), Artifacts.path(name)))
+    Artifacts.path(name)
   }
 
   /** q176's two schema epochs: even doc_ids written under the EARLY
-    * 3-column schema, odd under the full 5-column one — once per
-    * (JVM, source dir). */
+    * 3-column schema, odd under the full 5-column one. */
   private[graft] def schemaEpochs(s: SparkSession, dir: String): Seq[String] = {
-    val base = artifactRoot + "/epochs_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val (e1, e2) = (s"$base/e1", s"$base/e2")
-    // fence on the LAST-written epoch (the standard artifact
-    // discipline here): a crash between the e1 and e2 writes leaves
-    // e2/_SUCCESS absent, so the next run rebuilds BOTH instead of
-    // serving a half-built pair forever
-    if (!new java.io.File(e2, "_SUCCESS").exists()) {
+    val name = "epochs_" + Artifacts.key(dir)
+    val (e1, e2) = (Artifacts.path(name) + "/e1", Artifacts.path(name) + "/e2")
+    Artifacts.memo(name) {
       val docs = documents(s, dir)
       docs.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("text"), col("lang"))
@@ -3186,20 +3084,22 @@ object SparkEntry {
     Seq(e1, e2)
   }
 
-  /** q171's bucketed orders/customer tables: written ONCE per (JVM,
-    * source dir) — the layout is the artifact; the query's claim is
-    * that every later join on the bucket key runs exchange-free.
-    * Catalog table names must be identifiers, so the dir is folded to
-    * a lowercase tag. */
+  /** q171's bucketed orders/customer tables: the layout is the
+    * artifact; the query's claim is that every later join on the
+    * bucket key runs exchange-free. Catalog table names must be
+    * identifiers, so the dir is folded to a lowercase tag. Stays
+    * outside [[Artifacts.memo]]: the artifact is a registration in the
+    * session catalog, which a marker file cannot vouch for, so both
+    * tables are checked there. */
   private[graft] def bucketedTables(s: SparkSession, dir: String,
                                     force: Boolean = false): (String, String) = {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
     val (ot, ct) = (s"bkt_orders_$tag", s"bkt_customer_$tag")
-    if (force || !graft.catalog.Bucketed.exists(s, ot)) {
+    if (force || !Seq(ot, ct).forall(graft.catalog.Bucketed.exists(s, _))) {
       graft.catalog.Bucketed.write(orders(s, dir), ot,
-        s"$artifactRoot/$ot", "o_custkey", buckets = 8)
+        Artifacts.path(ot), "o_custkey", buckets = 8)
       graft.catalog.Bucketed.write(customer(s, dir), ct,
-        s"$artifactRoot/$ct", "c_custkey", buckets = 8)
+        Artifacts.path(ct), "c_custkey", buckets = 8)
     }
     (ot, ct)
   }

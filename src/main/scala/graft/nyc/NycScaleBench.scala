@@ -44,13 +44,7 @@ object NycScaleBench {
   def main(args: Array[String]): Unit = {
     val factor = args.lift(0).map(_.toInt).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(cpus)
     val (gen, pipe) = run(spark, factor)
     println(f"[nyc_scale] factor=$factor gen=$gen%.1f s pipeline=$pipe%.1f s")
     spark.stop()

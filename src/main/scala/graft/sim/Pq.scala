@@ -257,10 +257,9 @@ object Pq {
     * split the persisted IVF index (q77) established: codebook
     * training and corpus encoding are the passes that dominate at
     * 100 TB, paid once here; a query batch then reads two tables and
-    * runs the pure ADC scan. Codes are written LAST, so their
-    * `_SUCCESS` marker implies the whole index committed.
-    * Parquet round-trips binary64 and int arrays exactly, so the
-    * persisted path is bit-neutral: q96/q97 share the inline oracle. */
+    * runs the pure ADC scan. Parquet round-trips binary64 and int
+    * arrays exactly, so the persisted path is bit-neutral: q96/q97
+    * share the inline oracle. */
   def buildPqIndex(emb: DataFrame, catalog: graft.catalog.TableCatalog,
                    prefix: String, m: Int, k: Int, dim: Int,
                    iters: Int = 2, idCol: String = "vec_id",

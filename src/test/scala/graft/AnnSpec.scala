@@ -108,18 +108,6 @@ class AnnSpec extends SparkTestBase {
     assert(appended.nonEmpty)
   }
 
-  test("a forced rebuild that throws leaves no READY marker behind") {
-    var builds = 0
-    def fenced(force: Boolean)(build: => Unit): Unit =
-      SparkEntry.readyFenced("fence_probe", force) { builds += 1; build }
-    fenced(force = false)(())
-    fenced(force = false)(()) // marked: no rebuild
-    assert(builds == 1)
-    intercept[IllegalStateException](fenced(force = true)(throw new IllegalStateException("crash")))
-    fenced(force = false)(()) // the crash left the artifact unmarked: rebuilt
-    assert(builds == 3)
-  }
-
   test("tie-breaking operators refuse a string id column up front") {
     val e = Tables.embeddings(spark, sf)
       .withColumn("vec_id", concat(lit("doc-"), col("vec_id")))
