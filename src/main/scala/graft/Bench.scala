@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable
+import graft.queries.Builds
 object Bench {
   /** Parse a [[BenchChild]] stdout capture into its measured rows:
     * `[bench-child] <row> <seconds>` lines only, anything else
@@ -248,27 +249,17 @@ object Bench {
     // cost an explicit bench row instead of silently inflating the
     // first timed run (r6: q89 reported 9.9 s against a 1.2 s steady
     // state), and (b) keeps the timed rows below pure query-side cost.
-    // Row-name mapping: q47/q91/q43/q50/q61 share the pair graph
-    // (reported once as q47_build); q89 = standing components;
-    // q90 = prefix index (q89 probes it too); q84 = bloom; q77 = IVF;
-    // q78 = appended IVF. The graph-family builds (q47/q89/q147) ran
-    // as child rows above — the heaviest allocators and the rows the
-    // in-JVM fence kept failing to protect; the rest stay in-JVM
-    // where the r11 fence demonstrably works (q90 58.3->5.0 s,
-    // q77 12.6->1.2 s).
+    // Which artifact each row builds, and which queries read it: the
+    // build-row map, graft.queries.Builds. The graph-family builds
+    // (q47/q89/q147) ran as child rows above — the heaviest
+    // allocators and the rows the in-JVM fence kept failing to
+    // protect; the rest stay in-JVM where the r11 fence demonstrably
+    // works (q90 58.3->5.0 s, q77 12.6->1.2 s).
     // force = true: the first run builds exactly as before (nothing
     // exists yet in the run-scoped store); a canary/value-triggered
     // RE-RUN rebuilds honestly instead of timing the memo's no-op.
-    val builds: Seq[(String, () => Unit)] = Seq(
-      "q90_build" -> (() => SparkEntry.prefixIndexTable(spark, sfDir, force = true)),
-      "q84_build" -> (() => SparkEntry.bloomIndexTable(spark, sfDir, force = true)),
-      "q77_build" -> (() => SparkEntry.ivfIndexTable(spark, sfDir, force = true)),
-      "q78_build" -> (() => SparkEntry.ivfAppendedIndexTable(spark, sfDir, force = true)),
-      "q96_build" -> (() => SparkEntry.pqIndexTable(spark, sfDir, force = true)),
-      "q98_build" -> (() => SparkEntry.pqAppendedIndexTable(spark, sfDir, force = true)),
-      "q107_build" -> (() => SparkEntry.invertedIndexTable(spark, sfDir, force = true)),
-      "q167_build" -> (() => SparkEntry.orcExport(spark, sfDir, force = true)),
-      "q171_build" -> (() => SparkEntry.bucketedTables(spark, sfDir, force = true)))
+    val builds = Seq("q90_build", "q84_build", "q77_build", "q78_build",
+      "q96_build", "q98_build", "q107_build", "q167_build", "q171_build")
     // Every build row gets the SAME guaranteed-clean-heap fence the
     // heavy queries get below: twelve one-shot artifact builds back to
     // back are allocation-heavy and UNREPEATED (no min-of-two can mask
@@ -279,8 +270,7 @@ object Bench {
     // untimed pauses buys build rows that measure the build. Each
     // build closes its own canary window (memoization makes a re-run
     // meaningless, so the ratio marker is all the artifact can carry).
-    builds.filter { case (name, _) => wanted(name) }
-      .foreach { case (name, build) =>
+    builds.filter(wanted(_)).foreach { name =>
       // RERUNNABLE since r15 (force=true rebuilds honestly — see the
       // child builds above); the clean-heap fence lives INSIDE the
       // closure so a re-run gets the same pre-measurement GC as the
@@ -289,7 +279,7 @@ object Bench {
         dropAllState(gc = true)
         try {
           val t0 = System.nanoTime()
-          build()
+          Builds.rows(name)(spark, sfDir, true)
           Map(name -> (System.nanoTime() - t0) / 1e9)
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")

@@ -57,15 +57,9 @@ object BenchChild {
         // must re-execute (overwrite, identical content), not time the
         // memo's no-op. First spawns see an empty store, where
         // force is a no-op.
-        val build: String => Unit = row match {
-          case "q47_build" =>
-            d => { SparkEntry.pairGraphTable(spark, d, 0.4, force = true); () }
-          case "q89_build" =>
-            d => { SparkEntry.baseComponentsTable(spark, d, force = true); () }
-          case "q147_build" =>
-            d => { SparkEntry.pairGraphTable(spark, d, 0.25, force = true); () }
-          case other => sys.error(s"unknown build row: $other")
-        }
+        val rowBuild = graft.queries.Builds.rows.getOrElse(row,
+          sys.error(s"unknown build row: $row"))
+        val build: String => Unit = d => rowBuild(spark, d, true)
         // JIT warm via the same build at the tiny sf — dir-keyed
         // artifact names keep it separate; skipped when sfDir IS the
         // tiny sf (the warm would memoize the timed build to a no-op)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.dedup.{Curation, Dedup}
 import graft.sim.{Ann, Vectors}
+import graft.queries.SimQueries
 
 /** Measured recall/precision of every APPROXIMATE operator against its
   * EXACT ground truth — the quantified replacement for "trust me, LSH
@@ -108,7 +109,7 @@ object RecallReport {
     def pairs(df: DataFrame) = df.select(col("qid"), col("vec_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val truth = pairs(Ann.bruteForceTopK(emb, q, k = 5))
-    val signs = SparkEntry.jlSigns
+    val signs = SimQueries.jlSigns
     val raw = pairs(graft.sim.Jl.topK(emb, q, k = 5, signs))
     val rer = pairs(graft.sim.Jl.rerankTopK(emb, q, k = 5,
       shortlist = 100, signs))

@@ -153,20 +153,6 @@ object Curation {
         .withColumn("built_at_threshold", lit(threshold)),
       table)
 
-  /** LSH twin of [[materializePairs]] for corpora where the exact join
-    * is too expensive — same table contract (id_a, id_b, jaccard,
-    * built_at_threshold). */
-  def materializePairsLsh(docs: DataFrame, idCol: String, textCol: String,
-                          catalog: TableCatalog, table: String = "dup_pairs",
-                          cfg: Config = Config()): Unit =
-    catalog.overwrite(
-      Dedup.minhashPairs(docs, idCol, textCol,
-          shingleK = cfg.shingleK, nHashes = cfg.nHashes, bands = cfg.bands,
-          minJaccard = cfg.minJaccard)
-        .select(col("id_a"), col("id_b"), col("jaccard"))
-        .withColumn("built_at_threshold", lit(cfg.minJaccard)),
-      table)
-
   /** Duplicate-cluster resolution off the PERSISTED pair graph: reads
     * only the pair table — no document scan, no shingle/minhash
     * expressions, no similarity join anywhere in the plan (pinned by

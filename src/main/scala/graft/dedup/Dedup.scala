@@ -689,26 +689,14 @@ object Dedup {
 
   /** [[incrementalPairsFromCatalog]] that also reports the batch's
     * [[prefixIndexDrift]] — measured on the SAME materialized probe
-    * the candidate join consumes, so a per-tick caller
-    * ([[graft.streaming.IngestLoop]]) pays the batch tokenize + vocab
-    * probe + ranking window once, not once per concern. */
-  def incrementalPairsFromCatalogWithDrift(
-      corpusBase: DataFrame, batchBase: DataFrame, idCol: String,
-      catalog: graft.catalog.TableCatalog,
-      table: String): (DataFrame, Double) = {
-    val (pairs, drift, _) = incrementalPairsFromCatalogWithProbe(
-      corpusBase, batchBase, idCol, catalog, table)
-    (pairs, drift)
-  }
-
-  /** [[incrementalPairsFromCatalogWithDrift]] that ALSO hands back the
-    * materialized batch prefix rows — the index-schema (tok, id, sz,
-    * rn) frame the candidate join probed, which is byte-for-byte what
+    * the candidate join consumes — and hands back the materialized
+    * batch prefix rows: the index-schema (tok, id, sz, rn) frame the
+    * candidate join probed, which is byte-for-byte what
     * [[appendToPrefixIndex]] would compute for the same batch. A
     * fenced per-tick caller ([[graft.streaming.IngestLoop]]) stages
-    * these rows with its other commit artifacts, so the index append
-    * never pays the batch tokenize + vocab probe + ranking window a
-    * second time. */
+    * these rows with its other commit artifacts, so the batch
+    * tokenize + vocab probe + ranking window is paid once per tick,
+    * not once per concern. */
   def incrementalPairsFromCatalogWithProbe(
       corpusBase: DataFrame, batchBase: DataFrame, idCol: String,
       catalog: graft.catalog.TableCatalog,
@@ -727,13 +715,7 @@ object Dedup {
         threshold, keepDf = true)
       .repartition(sc.defaultParallelism, col("id")) // see probePrefixes
       .localCheckpoint(true)
-    val r = withDf
-      .agg(count(lit(1)).cast("long"),
-        sum(when(col("tok_df") === 0, 1L).otherwise(0L)).cast("long"))
-      .head()
-    val total = if (r.isNullAt(0)) 0L else r.getLong(0)
-    val unseen = if (r.isNullAt(1)) 0L else r.getLong(1)
-    val drift = if (total == 0L) 0.0 else unseen.toDouble / total
+    val drift = unseenPrefixShare(withDf)
     val prefixRows = withDf.drop("tok_df")
     (pairsFromProbe(prefixRows, corpusBase, batchBase, idCol,
       catalog, table, threshold), drift, prefixRows)
@@ -856,8 +838,15 @@ object Dedup {
     val spark = batchBase.sparkSession
     val threshold = catalog.read(spark, s"${table}__meta")
       .head().getAs[Double]("threshold")
-    val r = frozenVocabPrefixes(batchBase, idCol, catalog, table, threshold,
-        keepDf = true)
+    unseenPrefixShare(frozenVocabPrefixes(batchBase, idCol, catalog, table,
+      threshold, keepDf = true))
+  }
+
+  /** The [[prefixIndexDrift]] measure over prefix rows that carry
+    * their frozen `tok_df`: unseen (df 0) rows over all rows, 0.0 for
+    * an empty batch. */
+  private def unseenPrefixShare(withDf: DataFrame): Double = {
+    val r = withDf
       .agg(count(lit(1)).cast("long"),
         sum(when(col("tok_df") === 0, 1L).otherwise(0L)).cast("long"))
       .head()

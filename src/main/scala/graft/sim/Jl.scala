@@ -154,7 +154,7 @@ object Jl {
 
   /** DuckDB replay of [[project]]: CTEs (name → SQL body) rendering
     * the SAME sign matrix as list literals. Exposed for the oracle
-    * builders in SparkEntry. `qv` must provide (vec_id, q) int8 codes
+    * builders in [[graft.queries.SimQueries]]. `qv` must provide (vec_id, q) int8 codes
     * 1-indexed by list position. */
   private[graft] def projectionSql(signs: Array[Array[Int]],
                                    src: String): String = {

@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.StructType
   * streaming-native equivalents of its incremental patterns: windowed
   * aggregation with watermark (the streaming form of the batch
   * watermark filter, gold.py:56-65), and custom session state via
-  * `flatMapGroupsWithState`. Batch twins live in SparkEntry
-  * (q16/q17) so correctness is oracle-checked; these functions are
+  * `flatMapGroupsWithState`. Batch twins live in
+  * [[graft.queries.EtlQueries]] (q16/q17) so correctness is oracle-checked; these functions are
   * exercised by the streaming spec with a memory sink.
   */
 object EventStreams {

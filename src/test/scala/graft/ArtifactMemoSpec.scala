@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions.{lit, raise_error}
+import graft.queries.Builds
 
 /** Build-once artifacts are served only when complete: a build that
   * dies midway leaves the artifact unmarked, and the next call
@@ -21,19 +22,19 @@ class ArtifactMemoSpec extends SparkTestBase {
 
   test("a table dir left empty by a failed overwrite is rebuilt, not served") {
     // a cutoff no query uses, so no other suite reads this graph
-    val (cat, table) = SparkEntry.pairGraphTable(spark, sf, threshold = 0.45)
+    val (cat, table) = Builds.pairGraphTable(spark, sf, threshold = 0.45)
     val built = cat.read(spark, table).orderBy("id_a", "id_b").collect().toSeq
     assert(built.nonEmpty)
     dieMidOverwrite(cat, table, table)
-    val (cat2, table2) = SparkEntry.pairGraphTable(spark, sf, threshold = 0.45)
+    val (cat2, table2) = Builds.pairGraphTable(spark, sf, threshold = 0.45)
     assert(cat2.read(spark, table2).orderBy("id_a", "id_b").collect().toSeq == built)
   }
 
   test("a prefix index whose __meta write died is rebuilt") {
-    val (cat, table) = SparkEntry.prefixIndexTable(spark, sf)
+    val (cat, table) = Builds.prefixIndexTable(spark, sf)
     val rows = cat.read(spark, table).count()
     dieMidOverwrite(cat, table, s"${table}__meta")
-    val (cat2, table2) = SparkEntry.prefixIndexTable(spark, sf)
+    val (cat2, table2) = Builds.prefixIndexTable(spark, sf)
     assert(cat2.read(spark, s"${table2}__meta").collect()
       .map(_.getAs[Double]("threshold")).toSeq == Seq(0.4))
     assert(cat2.read(spark, table2).count() == rows)
@@ -55,7 +56,7 @@ class ArtifactMemoSpec extends SparkTestBase {
     def q171() = SparkEntry.queries("q171_bucketed_join")(spark, sf)
       .orderBy("c_mktsegment").collect().toSeq
     val expected = q171()
-    val (_, customer) = SparkEntry.bucketedTables(spark, sf)
+    val (_, customer) = Builds.bucketedTables(spark, sf)
     spark.sql(s"DROP TABLE $customer") // external: its files stay
     assert(q171() == expected)
   }

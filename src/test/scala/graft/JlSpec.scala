@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.sim.{Ann, Jl, Quantize}
+import graft.queries.SimQueries
 
 /** sim.Jl: signed-random-projection dimensionality reduction (q104)
   * and the JL-shortlist + exact-rerank composition (q105). */
@@ -48,7 +49,7 @@ class JlSpec extends SparkTestBase {
   test("topK ranking matches a Scala L2 replay and is partition-proof") {
     val emb = Tables.embeddings(spark, sf)
     val q = emb.filter(col("vec_id") < 4)
-    val signs = SparkEntry.jlSigns
+    val signs = SimQueries.jlSigns
     val got = Jl.topK(emb, q, k = 5, signs)
       .select(col("qid"), col("vec_id"), col("dist2"), col("rank"))
       .as[(Long, Long, Long, Int)].collect().toSeq.sorted
@@ -79,7 +80,7 @@ class JlSpec extends SparkTestBase {
       .select(col("qid"), col("vec_id"), col("rank"))
       .as[(Long, Long, Int)].collect().toSeq.sorted
     val rer = Jl.rerankTopK(emb, q, k = 5, shortlist = n,
-      SparkEntry.jlSigns)
+      SimQueries.jlSigns)
       .select(col("qid"), col("vec_id"), col("rank"))
       .as[(Long, Long, Int)].collect().toSeq.sorted
     assert(rer == exact)
@@ -118,7 +119,7 @@ class JlSpec extends SparkTestBase {
       .select((col("vec_id") + 1000L).as("vec_id"), col("embedding"))
     val corpus = emb.unionByName(dup)
     val top1 = Jl.topK(corpus, corpus.filter(col("vec_id") === 1000L),
-      k = 1, SparkEntry.jlSigns)
+      k = 1, SimQueries.jlSigns)
       .select(col("vec_id"), col("dist2")).as[(Long, Long)].head()
     assert(top1 == ((0L, 0L)))
   }

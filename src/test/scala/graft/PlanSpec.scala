@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import graft.queries.Builds
 
 /** Physical-plan regressions: the scale posture (pushdown, pruning,
   * broadcast choice, shuffle count) must not silently erode. */
@@ -109,7 +110,7 @@ class PlanSpec extends SparkTestBase {
     // so the no-corpus-scan property is pinned on the RESOLUTION INPUT:
     // the artifact table must exist and read as a bare parquet scan;
     // CurationSpec pins the same for componentsFromCatalog directly)
-    val (cat, table) = SparkEntry.pairGraphTable(spark, sf, threshold = 0.4)
+    val (cat, table) = Builds.pairGraphTable(spark, sf, threshold = 0.4)
     assert(cat.exists(spark, table))
     val pairScan = cat.read(spark, table).queryExecution.sparkPlan.toString
     assert(pairScan.contains("dup_pairs"), pairScan.take(2000))

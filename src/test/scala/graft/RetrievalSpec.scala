@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.text.Retrieval
+import graft.queries.RetrievalQueries
 
 /** text.Retrieval: inverted-index keyword search with whole-bit idf
   * (q106 inline, q107 persisted + bucket-pruned). */
@@ -48,7 +49,7 @@ class RetrievalSpec extends SparkTestBase {
     val cat = new graft.catalog.ParquetCatalog(tmp)
     val docs = Tables.documents(spark, sf)
     Retrieval.buildIndex(docs, "doc_id", "text", cat, "ix", nBuckets = 16)
-    val q = SparkEntry.keywordQueryFrame(spark)
+    val q = RetrievalQueries.keywordQueryFrame(spark)
     val inline = Retrieval.searchTopKInline(docs, "doc_id", "text", q, 10)
       .as[(Long, Long, Long, Int)].collect().toSeq.sorted
     val persisted = Retrieval.searchTopKFromCatalog(spark, cat, "ix", q, 10)
@@ -68,7 +69,7 @@ class RetrievalSpec extends SparkTestBase {
     val delta = docs.filter(col("doc_id") % 5 === 0)
     Retrieval.buildIndex(seed, "doc_id", "text", cat, "ix", nBuckets = 16)
     Retrieval.appendToIndex(delta, "doc_id", "text", cat, "ix")
-    val q = SparkEntry.keywordQueryFrame(spark)
+    val q = RetrievalQueries.keywordQueryFrame(spark)
     val appended = Retrieval.searchTopKFromCatalog(spark, cat, "ix", q, 10)
       .as[(Long, Long, Long, Int)].collect().toSeq.sorted
     val inline = Retrieval.searchTopKInline(docs, "doc_id", "text", q, 10)
@@ -141,7 +142,7 @@ class RetrievalSpec extends SparkTestBase {
     val delta = docs.filter(col("doc_id") % 5 === 0)
     Retrieval.buildIndex(seed, "doc_id", "text", cat, "ix", nBuckets = 16)
     Retrieval.appendToIndex(delta, "doc_id", "text", cat, "ix")
-    val q = SparkEntry.phraseQueryFrame(spark)
+    val q = RetrievalQueries.phraseQueryFrame(spark)
     val persisted = Retrieval.phraseSearchFromCatalog(spark, cat, "ix", q)
       .as[(Long, Long, Long, Long)].collect().toSeq.sorted
     val inline = Retrieval.phraseSearchInline(docs, "doc_id", "text", q)
@@ -219,7 +220,7 @@ class RetrievalSpec extends SparkTestBase {
       docs.filter(col("doc_id") % 2 === 1).write.mode("append").parquet(dir)
       q.processAllAvailable()
     } finally q.stop()
-    val queries = SparkEntry.keywordQueryFrame(spark)
+    val queries = RetrievalQueries.keywordQueryFrame(spark)
     val streamed = Retrieval
       .searchTopKFromCatalog(spark, cat, "six", queries, k = 10)
       .as[(Long, Long, Long, Int)].collect().toSeq.sorted
@@ -228,7 +229,7 @@ class RetrievalSpec extends SparkTestBase {
       .as[(Long, Long, Long, Int)].collect().toSeq.sorted
     assert(streamed == inline && streamed.nonEmpty)
     // a phrase lookup off the same streamed index also agrees
-    val pq = SparkEntry.phraseQueryFrame(spark)
+    val pq = RetrievalQueries.phraseQueryFrame(spark)
     val sp = Retrieval.phraseSearchFromCatalog(spark, cat, "six", pq)
       .as[(Long, Long, Long, Long)].collect().toSeq.sorted
     val ip = Retrieval.phraseSearchInline(docs, "doc_id", "text", pq)
@@ -257,7 +258,7 @@ class RetrievalSpec extends SparkTestBase {
     val docs = Tables.documents(spark, sf)
     val b0 = docs.filter(col("doc_id") % 2 === 0)
     val b1 = docs.filter(col("doc_id") % 2 === 1)
-    val queries = SparkEntry.keywordQueryFrame(spark)
+    val queries = RetrievalQueries.keywordQueryFrame(spark)
     val want = Retrieval.searchTopKInline(docs, "doc_id", "text",
       queries, 10).as[(Long, Long, Long, Int)].collect().toSeq.sorted
     val cleanPostings = Retrieval.postings(docs, "doc_id", "text").count()
@@ -294,7 +295,7 @@ class RetrievalSpec extends SparkTestBase {
 
   test("search is partition-independent on real docs") {
     val docs = Tables.documents(spark, sf)
-    val q = SparkEntry.keywordQueryFrame(spark)
+    val q = RetrievalQueries.keywordQueryFrame(spark)
     val a = Retrieval.searchTopKInline(docs, "doc_id", "text", q, 10)
       .as[(Long, Long, Long, Int)].collect().toSeq.sorted
     val b = Retrieval.searchTopKInline(docs.repartition(13), "doc_id",

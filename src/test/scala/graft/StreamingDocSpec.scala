@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.dedup.{Curation, Dedup}
 import graft.streaming.DocStreams
 import graft.text.{TextFunctions => TF}
+import graft.queries.RetrievalQueries
 
 /** streaming.DocStreams: the curation gates on an ingest stream must
   * agree with the batch chain's lang→quality→exact prefix. */
@@ -113,7 +114,7 @@ class StreamingDocSpec extends SparkTestBase {
 
   test("streamed phrase decontamination equals q112's kept set") {
     val docs = Tables.documents(spark, sf)
-    val phrases = SparkEntry.phraseQueries.map(_._2)
+    val phrases = RetrievalQueries.phraseQueries.map(_._2)
     val dir = java.nio.file.Files.createTempDirectory("graft-decon").toString
     docs.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(docs.schema).parquet(dir)
@@ -126,7 +127,7 @@ class StreamingDocSpec extends SparkTestBase {
         .select("doc_id").as[Long].collect().toSet
       val batchKept = graft.text.Retrieval
         .phraseDecontaminate(docs, "doc_id", "text",
-          SparkEntry.phraseQueryFrame(spark))
+          RetrievalQueries.phraseQueryFrame(spark))
         .filter(col("kept") === 1)
         .select("doc_id").as[Long].collect().toSet
       assert(streamed == batchKept && streamed.nonEmpty)
