@@ -173,19 +173,10 @@ object Bench {
     // skip most of the plan); noop sink measures compute, not disk.
     def run(name: String, fn: (SparkSession, String) => DataFrame, dir: String): Unit =
       fn(spark, dir).write.format("noop").mode("overwrite").save()
-    // Drop every block this JVM is holding: cached tables, persisted
-    // RDDs (localCheckpoint(true) registers its blocks here), then a GC
-    // so ContextCleaner reaps blocks whose RDD reference already died.
-    // One 128 GiB JVM runs ~100 queries back to back; without this the
-    // leftover storage of query N raises memory pressure under query
-    // N+1 and the bench measures the harness, not the operator (r7:
-    // 1.8-10x phantom regressions on code-untouched queries).
-    def dropAllState(gc: Boolean): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      if (gc) { System.gc(); Thread.sleep(1000) }
-    }
+    // One 128 GiB JVM runs ~100 queries back to back: drop every
+    // block between them (see Sessions.dropBlocks)
+    def dropAllState(gc: Boolean): Unit =
+      Sessions.dropBlocks(spark, gcPauseMs = if (gc) 1000 else 0)
     // Spawn one chronic row in a FRESH JVM ([[BenchChild]]) and parse
     // its `[bench-child] <row> <sec>` lines. Fences and forced GC
     // (r9-r11) provably cannot protect composite/late rows inside one
@@ -391,12 +382,7 @@ object Bench {
         } catch { case e: Throwable =>
           System.err.println(s"[bench] nyc_full_year_pipeline FAILED: ${e.getMessage}")
           Map("nyc_full_year_pipeline" -> -1.0)
-        } finally {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(root).sorted(
-              java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-        }
+        } finally Sessions.deleteTree(root)
       }
       closeWindow()
     }
@@ -489,11 +475,6 @@ object Bench {
     spark.stop()
     // the shared artifact store is bench-run-scoped — delete it so
     // repeated driver runs don't strand the pair graphs/indexes in /tmp
-    locally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(artifactRoot))
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    Sessions.deleteTree(java.nio.file.Paths.get(artifactRoot))
   }
 }

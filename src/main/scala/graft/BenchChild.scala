@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions.col
+import graft.ops.Pins
 
 /** One chronic bench row in a FRESH JVM — the subprocess half of the
   * [[Bench]] isolation discipline. Three rounds of in-JVM fence
@@ -36,12 +37,7 @@ object BenchChild {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.local(cpus)
 
-    def drop(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      System.gc(); Thread.sleep(500)
-    }
+    def drop(): Unit = Sessions.dropBlocks(spark, gcPauseMs = 500)
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
@@ -112,23 +108,16 @@ object BenchChild {
             docs.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 5),
             cat, st)
           def tickOn(slice: Int): Double = {
-            val batch = docs.filter(col("doc_id") % 10 === slice)
-              .localCheckpoint(true) // charge the tick, not the scan
+            val batch = Pins.pin( // charge the tick, not the scan
+              docs.filter(col("doc_id") % 10 === slice))
             timed(graft.streaming.IngestLoop.ingest(batch, cat, st))
           }
           val tick = math.min(tickOn(5), tickOn(0))
-          val batch0 = docs.filter(col("doc_id") % 10 === 0)
-            .localCheckpoint(true)
+          val batch0 = Pins.pin(docs.filter(col("doc_id") % 10 === 0))
           val quiet = timed(
             graft.streaming.IngestLoop.ingest(batch0, cat, st))
           Seq("ingest_loop_tick" -> tick, "ingest_loop_quiescent" -> quiet)
-        } finally {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(root).sorted(
-              java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .iterator().asScala
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        }
+        } finally Sessions.deleteTree(root)
 
       case other => sys.error(s"unknown kind: $other")
     }

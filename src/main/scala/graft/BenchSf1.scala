@@ -150,23 +150,13 @@ object BenchSf1 {
       lines.mkString("[\n", ",\n", "\n]\n"))
     println(lines.mkString("[\n", ",\n", "\n]"))
     // bench-run-scoped shared store — don't strand it in /tmp
-    locally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(artifactRoot))
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    Sessions.deleteTree(java.nio.file.Paths.get(artifactRoot))
   }
 
   // -------------------------------------------------------------- child
   private def childMain(row: String, root: String): Unit = {
     val spark = session()
-    def dropAllState(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      System.gc(); Thread.sleep(1000)
-    }
+    def dropAllState(): Unit = Sessions.dropBlocks(spark, gcPauseMs = 1000)
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions.col
+import graft.ops.Pins
 
 /** Dev tool: time the ingest loop's tick shapes in a fresh JVM —
   * `runMain graft.IngestBench [sfDir]`. The full Bench times them once
@@ -39,7 +40,7 @@ object IngestBench {
         graft.streaming.IngestLoop.build(
           docs.filter(col("doc_id") % 10 =!= 0), cat, st)
       }
-      val batch = docs.filter(col("doc_id") % 10 === 0).localCheckpoint(true)
+      val batch = Pins.pin(docs.filter(col("doc_id") % 10 === 0))
       timed("tick") {
         var last = System.nanoTime()
         graft.streaming.IngestLoop.ingestImpl(batch, cat, st, stage => {
@@ -50,12 +51,7 @@ object IngestBench {
       }
       for (i <- 1 to 3)
         timed(s"quiescent$i")(graft.streaming.IngestLoop.ingest(batch, cat, st))
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).sorted(
-          java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    } finally Sessions.deleteTree(root)
     spark.stop()
   }
 }

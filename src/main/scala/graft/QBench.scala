@@ -22,12 +22,7 @@ object QBench {
     // run N otherwise raise memory pressure under run N+1 and the
     // isolated numbers stop matching the sweep's (observed: q89
     // flapping 6-12 s here vs a stable sweep row).
-    def drop(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      System.gc(); Thread.sleep(500)
-    }
+    def drop(): Unit = Sessions.dropBlocks(spark, gcPauseMs = 500)
     // untimed warm-up excluded from the printed list: the first run
     // reads 3–15x steady state (JIT + page-cache fill — observed q15
     // 6.27 then 0.40–0.66), and anyone quoting run #1 gets a phantom

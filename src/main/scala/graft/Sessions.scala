@@ -23,4 +23,28 @@ object Sessions {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Drop every block this JVM is holding: cached tables, persisted
+    * RDDs (an eager pin registers its blocks here), then — when
+    * `gcPauseMs > 0` — a GC and a pause of that length so the
+    * ContextCleaner reaps blocks whose RDD reference already died.
+    * A bench JVM runs many queries back to back; without this the
+    * leftover storage of query N raises memory pressure under query
+    * N+1 and the bench measures the harness, not the operator (r7:
+    * 1.8-10x phantom regressions on code-untouched queries). */
+  def dropBlocks(spark: SparkSession, gcPauseMs: Long): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    if (gcPauseMs > 0) { System.gc(); Thread.sleep(gcPauseMs) }
+  }
+
+  /** Delete `root` and everything under it (the benches' scratch
+    * catalogs and artifact stores). */
+  def deleteTree(root: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(root)
+      .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
+  }
 }

@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Pins
 import graft.sim.Vectors
 import graft.text.TextFunctions
 
@@ -210,7 +211,7 @@ object Dedup {
         graft.functions.exprs.jaccard_sim(col("p_a"), col("p_b")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("est_jaccard"), col("jaccard"))
-    val out = verified.localCheckpoint(true)
+    val out = Pins.pin(verified)
     sigs.unpersist(false)
     prepped.unpersist(false)
     out
@@ -282,7 +283,7 @@ object Dedup {
         .filter(col("hamming") <= maxHamming)
         .dropDuplicates("id_a", "id_b")
     if (eager) {
-      val out = verified.localCheckpoint(true)
+      val out = Pins.pin(verified)
       sh.unpersist(false)
       out
     } else verified
@@ -331,34 +332,32 @@ object Dedup {
     *
     * `base` must be (idCol, set: array<string>), set elements distinct.
     *
-    * `broadcastIndex` decides whether the prefix-index side of the
-    * candidate join is broadcast. Semantics are identical either way —
-    * it is purely a physical-plan choice, like Spark's own
-    * `broadcast()` hint: the index is the flat (tok,id,sz,rn) prefix
-    * frame, ~0.6× the corpus token count. Broadcast removes the
-    * candidate join's shuffle AND, because the probe side arrives
+    * Whether the prefix-index side of the candidate join is broadcast
+    * is decided here, never by the caller. Semantics are identical
+    * either way — it is purely a physical-plan choice, like Spark's
+    * own `broadcast()` hint: the index is the flat (tok,id,sz,rn)
+    * prefix frame, ~0.6× the corpus token count. Broadcast removes
+    * the candidate join's shuffle AND, because the probe side arrives
     * partitioned by id from the rank window, makes each partition's
     * (id_a,id_b) partial-aggregation keys disjoint — partial agg
     * output collapses to its theoretical minimum (measured
-    * 12.8 s → 4.2 s at sf0.1). `None` (the default) decides from the
-    * MEASURED size of the materialized index: broadcast only when the
-    * estimated bytes fit under `graft.exact.broadcastIndexMaxBytes`
+    * 12.8 s → 4.2 s at sf0.1). The decision comes from the MEASURED
+    * size of the index: broadcast only when the estimated bytes fit
+    * under `graft.exact.broadcastIndexMaxBytes`
     * (default 256 MiB — executor-heap-scale, not Spark's conservative
     * 10 MB autoBroadcastJoinThreshold, because this operator's role is
     * ground-truth-scale corpora; the LSH twins are the 100 TB path).
     * A corpus whose index outgrows the cap falls back to the
-    * partitioned sort-merge form instead of OOMing the driver.
-    * `Some(true)`/`Some(false)` force the choice.
+    * partitioned sort-merge form instead of OOMing the driver
+    * (BroadcastCapSpec runs both sides of the cap).
     *
     * `eager` (default true) materializes the (small) verified-pairs
     * result via localCheckpoint so the prefix cache is released before
     * returning; false returns a PURE lazy plan — no persist, no jobs,
     * no driver state to leak (used by plan-pinning tests). Because no
-    * job may run in the lazy path, `broadcastIndex=None` there
-    * resolves to broadcast (override with `Some(false)`). */
+    * job may run in the lazy path, it always broadcasts the index. */
   def exactSimilarityPairs(base: DataFrame, idCol: String,
                            threshold: Double,
-                           broadcastIndex: Option[Boolean] = None,
                            eager: Boolean = true): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold — 0 would make every " +
@@ -383,7 +382,7 @@ object Dedup {
     val prefixes =
       if (eager) prefixesPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else prefixesPlan
-    val doBroadcast = decideBroadcast(prepped, threshold, broadcastIndex, eager)
+    val doBroadcast = decideBroadcast(prepped, threshold, eager)
     val cand = ppjoinCandidates(prefixes, prefixes, threshold, doBroadcast,
       pairFilter = col("id_a") < col("id_b"))
     val verified = verifyJaccard(cand, prepped, threshold)
@@ -394,7 +393,7 @@ object Dedup {
     // the operator eager — its callers (dedup gates, oracle queries)
     // all consume the pairs immediately anyway.
     if (eager) {
-      val out = verified.localCheckpoint(true)
+      val out = Pins.pin(verified)
       prefixes.unpersist(false)
       out
     } else verified
@@ -538,17 +537,14 @@ object Dedup {
   }
 
   private def decideBroadcast(prepped: DataFrame, threshold: Double,
-                              broadcastIndex: Option[Boolean],
                               eager: Boolean): Boolean =
-    broadcastIndex.getOrElse {
-      if (!eager) true // no job allowed in the lazy path; Some(false) overrides
-      else {
-        val cap = IndexSizing.cap(prepped.sparkSession)
-        val key = (prepped.queryExecution.analyzed.semanticHash(),
-          java.lang.Double.doubleToLongBits(threshold), cap)
-        broadcastDecisionCache.computeIfAbsent(key,
-          _ => IndexSizing.estimateFromSample(prepped, threshold) <= cap)
-      }
+    if (!eager) true // no job allowed in the lazy path
+    else {
+      val cap = IndexSizing.cap(prepped.sparkSession)
+      val key = (prepped.queryExecution.analyzed.semanticHash(),
+        java.lang.Double.doubleToLongBits(threshold), cap)
+      broadcastDecisionCache.computeIfAbsent(key,
+        _ => IndexSizing.estimateFromSample(prepped, threshold) <= cap)
     }
 
   /** Incremental EXACT similarity maintenance: every ≥-threshold pair
@@ -574,7 +570,6 @@ object Dedup {
     * Output (id_a, id_b, jaccard), id_a < id_b, each pair once. */
   def incrementalSimilarityPairs(corpusBase: DataFrame, batchBase: DataFrame,
                                  idCol: String, threshold: Double,
-                                 broadcastIndex: Option[Boolean] = None,
                                  eager: Boolean = true): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
@@ -586,7 +581,7 @@ object Dedup {
     val prefixes =
       if (eager) prefixesPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else prefixesPlan
-    val doBroadcast = decideBroadcast(prepped, threshold, broadcastIndex, eager)
+    val doBroadcast = decideBroadcast(prepped, threshold, eager)
     // probe side: batch prefixes only (the incremental restriction);
     // pairFilter is != rather than < because a batch doc must also
     // pair with corpus docs of LOWER id — batch×batch pairs arrive in
@@ -599,7 +594,7 @@ object Dedup {
         greatest(col("id_a"), col("id_b")).as("id_b"), col("jaccard"))
       .dropDuplicates("id_a", "id_b")
     if (eager) {
-      val out = verified.localCheckpoint(true)
+      val out = Pins.pin(verified)
       prefixes.unpersist(false)
       out
     } else verified
@@ -714,7 +709,7 @@ object Dedup {
     val withDf = frozenVocabPrefixes(batchBase, idCol, catalog, table,
         threshold, keepDf = true)
       .repartition(sc.defaultParallelism, col("id")) // see probePrefixes
-      .localCheckpoint(true)
+      .transform(Pins.pin(_))
     val drift = unseenPrefixShare(withDf)
     val prefixRows = withDf.drop("tok_df")
     (pairsFromProbe(prefixRows, corpusBase, batchBase, idCol,
@@ -738,7 +733,7 @@ object Dedup {
     val cand = ppjoinCandidates(batchPrefixes, index, threshold,
       broadcastPersistedIndex(spark, catalog, table),
       pairFilter = col("id_a") =!= col("id_b"))
-      .localCheckpoint(false)
+      .transform(Pins.pin(_, eager = false))
     val candIds = cand.select(col("id_a").as("id"))
       .unionByName(cand.select(col("id_b").as("id"))).distinct()
     // verification payloads for CANDIDATE-TOUCHING docs only: the
@@ -750,7 +745,7 @@ object Dedup {
     val prepped = corpusBase.select(col(idCol).as("id"), col("set"))
       .unionByName(batchBase.select(col(idCol).as("id"), col("set")))
       .join(broadcast(candIds), Seq("id"), "left_semi")
-      .localCheckpoint(true)
+      .transform(Pins.pin(_))
     verifyJaccard(cand, prepped, threshold)
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"), col("jaccard"))
@@ -775,7 +770,7 @@ object Dedup {
     val sc = batchBase.sparkSession.sparkContext
     frozenVocabPrefixes(batchBase, idCol, catalog, table, threshold)
       .repartition(sc.defaultParallelism, col("id"))
-      .localCheckpoint(true)
+      .transform(Pins.pin(_))
   }
 
   /** Batch prefix rows under the frozen vocabulary: the vocab table
@@ -875,19 +870,17 @@ object Dedup {
     * approximate [[ngramJaccardPairs]] — same sets, zero recall loss). */
   def exactNgramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                              n: Int, threshold: Double,
-                             broadcastIndex: Option[Boolean] = None,
                              eager: Boolean = true): DataFrame =
     exactSimilarityPairs(
       docs.select(col(idCol), charNgrams(col(textCol), n).as("set")),
-      idCol, threshold, broadcastIndex, eager)
+      idCol, threshold, eager)
 
   /** Exact word-shingle Jaccard pairs (ground truth for [[minhashPairs]]). */
   def exactShingleJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                               k: Int, threshold: Double,
-                               broadcastIndex: Option[Boolean] = None): DataFrame =
+                               k: Int, threshold: Double): DataFrame =
     exactSimilarityPairs(
       docs.select(col(idCol), shingles(col(textCol), k).as("set")),
-      idCol, threshold, broadcastIndex)
+      idCol, threshold)
 
   // ------------------------------------------- component resolution
 
@@ -906,14 +899,14 @@ object Dedup {
     * hard stop, and non-convergence within it throws rather than
     * silently returning partial components.
     *
-    * Each round's label frame is EAGERLY localCheckpoint-ed, not just
-    * persisted: caching keeps the data but Catalyst still re-analyzes
-    * the full accumulated lineage every round, and with the label
-    * frame referenced four times per round the logical plan grows
-    * ~4^rounds — the optimizer, not the data, became the bottleneck
-    * (measured 51 s for a 477-node graph). Checkpointing truncates the
-    * plan to a leaf each round; on a cluster with flaky executors swap
-    * in reliable `checkpoint` (same call shape, HDFS-backed).
+    * Each round's label frame is pinned ([[graft.ops.Pins.pin]],
+    * lazy), not just persisted: caching keeps the data but Catalyst
+    * still re-analyzes the full accumulated lineage every round, and
+    * with the label frame referenced four times per round the logical
+    * plan grows ~4^rounds — the optimizer, not the data, became the
+    * bottleneck (measured 51 s for a 477-node graph). The pin
+    * truncates the plan to a leaf each round; on a cluster with flaky
+    * executors `graft.checkpoint.reliable` makes it DFS-backed.
     *
     * Returns (id, component) for every node that appears in `pairs`. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
@@ -943,7 +936,7 @@ object Dedup {
     var checkpointed = edges.select(col("src").as("id"))
       .distinct()
       .withColumn("component", col("id"))
-      .localCheckpoint(true)
+      .transform(Pins.pin(_))
     var labels = checkpointed
     var iter = 0
     var converged = false
@@ -973,8 +966,8 @@ object Dedup {
             .as("component"))
         .select(col("id"), col("component"),
           (col("component") < col("__old")).as("__chg"))
-        .localCheckpoint(false) // lazy: truncates lineage immediately,
-                                // materializes under the count below
+        .transform(Pins.pin(_, eager = false)) // lazy: truncates lineage
+                                // now, materializes under the count below
       val changed = next.filter(col("__chg")).count()
       checkpointed.unpersist()
       checkpointed = next
@@ -1094,8 +1087,7 @@ object Dedup {
     * [[graft.streaming.IngestLoop]] by id-hash) applies the remap to
     * the touched partitions only instead of rewriting the corpus. */
   def incrementalComponentsDelta(components: DataFrame,
-                                 deltaPairs: DataFrame,
-                                 pinned: Boolean = false)
+                                 deltaPairs: DataFrame)
       : Option[(DataFrame, DataFrame)] = {
     val compOf = components.select(col("id"), col("component"))
     // materialize the delta ONCE: the pair frame usually arrives as a
@@ -1104,18 +1096,15 @@ object Dedup {
     // the contraction, the new-node anti-join) — without the pin each
     // branch re-ran the whole candidate+verify chain (measured: q89's
     // warm runs paid the q90 chain ~4x, 12 s where the pinned form
-    // takes ~3). A caller that already materialized the pairs says so
-    // via `pinned` and skips the redundant checkpoint job.
-    val delta =
-      if (pinned) deltaPairs.select(col("id_a"), col("id_b"))
-      else deltaPairs.select(col("id_a"), col("id_b")).localCheckpoint(true)
+    // takes ~3).
+    val delta = Pins.pin(deltaPairs.select(col("id_a"), col("id_b")))
     val deltaNodes = delta.select(col("id_a").as("id"))
       .unionByName(delta.select(col("id_b").as("id"))).distinct()
     // delta-scale assignment lookup: components is scanned, not
     // shuffled (broadcast semi-probe), and the survivors are tiny
     val touched = compOf
       .join(broadcast(deltaNodes), Seq("id"), "left_semi")
-      .localCheckpoint(true)
+      .transform(Pins.pin(_))
     val lookup = broadcast(touched)
     val contracted = delta
       .join(lookup.select(col("id").as("id_a"), col("component").as("ca")),
@@ -1161,7 +1150,7 @@ object Dedup {
     val viaDriver = capped.length <= ufCap
     val merged =
       if (viaDriver) unionFindFromEdges(components.sparkSession, capped, idType)
-      else connectedComponents(contracted.localCheckpoint(true))
+      else connectedComponents(Pins.pin(contracted))
     // merged includes the identity row for every root, so the remap is
     // idempotent (fixed points stay fixed) — load-bearing for the
     // partition-scoped apply's crash recovery.
@@ -1169,10 +1158,9 @@ object Dedup {
     // yields a LocalRelation, which multiple consumers re-read for
     // free — a checkpoint there is a pure scheduling tax (two jobs a
     // tick, measured ~0.3 s of pure overhead).
-    def pin(df: DataFrame): DataFrame =
-      if (viaDriver) df else df.localCheckpoint(true)
-    val remapDf = pin(merged
-      .select(col("id").as("component"), col("component").as("newc")))
+    val remap = merged
+      .select(col("id").as("component"), col("component").as("newc"))
+    val remapDf = if (viaDriver) remap else Pins.pin(remap)
     // delta endpoints unseen by the standing assignment (new docs,
     // or corpus docs first entering a pair): their contracted node is
     // themselves, so the merge result IS their label. The chain is
@@ -1278,7 +1266,7 @@ object Dedup {
     // encode-once lesson; the frame is probes·|corpus| rows, blocks
     // reclaimed by the ContextCleaner when the result frame dies).
     // Pin semantics / fault-tolerance trade: [[graft.ops.Pins.pin]].
-    val assigned = graft.ops.Pins.pin(corpus.crossJoin(broadcast(cent))
+    val assigned = Pins.pin(corpus.crossJoin(broadcast(cent))
       .withColumn("csim", Vectors.cosine(col("v"), col("cv")))
       .groupBy(col("id"))
       .agg(first(col("v")).as("v"),
@@ -1529,7 +1517,7 @@ object Dedup {
     // disk), traded against repeated full tokenize passes;
     // [[graft.ops.Pins.pin]]'s reliable mode applies here like every
     // other pin.
-    val outToks = graft.ops.Pins.pin(
+    val outToks = Pins.pin(
       out.select(col("id"), col("sz"), explode(col("set")).as("tok")))
     // token order from the OUTER (corpus) side's dfs: rarest-first
     // keeps the candidate join key off stop-grams; any fixed order is
@@ -1563,7 +1551,7 @@ object Dedup {
       // ContextCleaner when the result frame dies. Pin semantics and
       // the fault-tolerance trade: [[graft.ops.Pins.pin]]
       // (graft.checkpoint.reliable swaps in the DFS-backed form).
-      .transform(graft.ops.Pins.pin)
+      .transform(Pins.pin(_))
     // Each encoded side feeds TWO consumers (inEnc: prefix slice +
     // verify join-back; outEnc: candidate index + verify join-back),
     // and the self-join forms (q208/q209/q210 pass the same frame
@@ -1581,7 +1569,7 @@ object Dedup {
     def encodePlan(d: DataFrame) = encodeToks(
       d.select(col("id"), col("sz"), explode(col("set")).as("tok")))
     // the corpus encode reads the PINNED gram table — no re-tokenize
-    val outEnc = graft.ops.Pins.pin(encodeToks(outToks))
+    val outEnc = Pins.pin(encodeToks(outToks))
     // PROPORTIONAL pin (r14 verdict): the exact-gate form (prefixCap
     // empty) is by contract batch-vs-corpus — `inner` is the small
     // ingest batch, and re-running its encode subtree for the two
@@ -1594,7 +1582,7 @@ object Dedup {
     val inEnc =
       if (inner eq outer) outEnc
       else if (prefixCap.isEmpty) encodePlan(in)
-      else graft.ops.Pins.pin(encodePlan(in))
+      else Pins.pin(encodePlan(in))
     // prefix length: sz − ceil(t·sz) + 1, ceil in exact integers,
     // capped for the sketch form — a slice of the ascending gid array
     val prefLen = prefixCap.fold(

@@ -33,12 +33,7 @@ object NycScaleBench {
       val t1 = System.nanoTime()
       NycPipeline.runYear(spark, cfg)
       (gen, (System.nanoTime() - t1) / 1e9)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).sorted(
-          java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    } finally graft.Sessions.deleteTree(root)
   }
 
   def main(args: Array[String]): Unit = {

@@ -187,18 +187,16 @@ object Eval {
     *     way q52 raises its bucket count. Parallelism is
     *     |segments|·nBuckets throughout.
     *
-    * Each rank round is pinned through `pin` — by default a LAZY
-    * `localCheckpoint(false)`, which truncates the ~4^rounds logical
-    * plan growth while deferring block materialization to the next
+    * Each rank round is pinned LAZILY ([[Pins.pin]] with
+    * `eager = false`), which truncates the ~4^rounds logical plan
+    * growth while deferring block materialization to the next
     * round's first consumer (interleaved A/B at sf0.1: lazy 6.4–6.7 s
     * vs eager 7.3–7.5 s min-of-5 — eager paid a dedicated job per
-    * round). Blocks still land on executors, so it is NOT
+    * round). By default the blocks land on executors, so it is NOT
     * executor-loss-tolerant: on a real cluster a lost executor fails
-    * the job. Cluster deployments pass a reliable pin instead — a
-    * write-read through the table catalog (see KendallScalableSpec's
-    * catalog-pin test) or `checkpoint(true)` against a replicated
-    * checkpoint dir — trading one round-trip write per round for
-    * fault tolerance; output is pin-independent.
+    * the job. `graft.checkpoint.reliable` makes every round's pin
+    * DFS-backed instead, trading one checkpoint write per round for
+    * fault tolerance; output is pin-independent (PinsSpec).
     *
     * Inputs must be non-null in `xCol`/`yCol` (enforced in-plan, the
     * ZOrder guard discipline): the O(n²) form's pair algebra counts a
@@ -219,8 +217,6 @@ object Eval {
   def kendallBySegmentScalable(df: DataFrame, segCol: String,
                                xCol: String, yCol: String, idCol: String,
                                nBuckets: Int = 32,
-                               pin: DataFrame => DataFrame =
-                                 _.localCheckpoint(false),
                                requireUniqueIds: Boolean = false): DataFrame = {
     require(nBuckets >= 2 && (nBuckets & (nBuckets - 1)) == 0,
       s"nBuckets must be a power of two >= 2, got $nBuckets")
@@ -284,30 +280,31 @@ object Eval {
 
     // merge rounds: rank under (y, ord) within (seg, bucket >> r);
     // ord is unique per segment, so every rank is tie-free. Each
-    // round is pinned via `pin` (default lazy localCheckpoint) —
-    // segmentedRowNumber branches its input's lineage (bounds,
-    // offsets), so chaining log2(B) calls lazily grows the LOGICAL
-    // plan ~4^rounds and analysis time with it; the pin truncates to
-    // a materialized plan per round, the IngestLoop/Dedup discipline
-    // (see the scaladoc for the cluster-scale reliable pin). The
-    // per-segment
-    // totals then come back via one BOUNDED collect (|segments| rows,
-    // the watermark rule) so the returned frame holds no block refs.
+    // round is pinned lazily — segmentedRowNumber branches its input's
+    // lineage (bounds, offsets), so chaining log2(B) calls lazily
+    // grows the LOGICAL plan ~4^rounds and analysis time with it; the
+    // pin truncates to a materialized plan per round, the
+    // IngestLoop/Dedup discipline (see the scaladoc for the
+    // cluster-scale reliable pin). The per-segment totals then come
+    // back via one BOUNDED collect (|segments| rows, the watermark
+    // rule) so the returned frame holds no block refs.
     def rankRound(d: DataFrame, r: Int): DataFrame =
       Quantiles.segmentedRowNumber(
         d.withColumn("__grp", concat(col("__segs"), lit("|"),
           shiftright(col("__xbkt"), r).cast("string"))),
         "__grp", "__y", Seq(col("__y"), col("__ord")), 8)
         .drop("__n", "__grp")
-    var cur = pin(rankRound(positioned, 0)
+    var cur = rankRound(positioned, 0)
       .withColumnRenamed("__rn", "__rprev")
-      .withColumn("__d", lit(0L)))
+      .withColumn("__d", lit(0L))
+      .transform(Pins.pin(_, eager = false))
     for (r <- 1 to rounds) {
-      cur = pin(rankRound(cur, r)
+      cur = rankRound(cur, r)
         .withColumn("__d", col("__d") +
           when(shiftright(col("__xbkt"), r - 1) % 2 === 0,
             col("__rn") - col("__rprev")).otherwise(lit(0L)))
-        .drop("__rprev").withColumnRenamed("__rn", "__rprev"))
+        .drop("__rprev").withColumnRenamed("__rn", "__rprev")
+        .transform(Pins.pin(_, eager = false))
     }
     val dCrossRows = cur.groupBy(col("__segs"))
       .agg(sum("__d").as("__d_cross")).collect()

@@ -85,19 +85,14 @@ object LinkAnalysis {
     * at corpus scale LPA converges in a handful of sweeps and the
     * fixed count is what the SQL replay pins.
     *
-    * Each round's label frame goes through `pin`. Default IDENTITY:
-    * at the declared fixed rounds (3) the per-round growth is one
-    * join + one aggregate — bounded lineage, and an eager
-    * localCheckpoint default measured a 2.3× slowdown on the q196
-    * sibling for nothing. Raising `rounds` ≫ 3 on a cluster is when
-    * the hook earns its keep: pass `_.localCheckpoint(true)`
-    * ([[graft.ops.Eval.kendallBySegmentScalable]]'s default, whose
-    * ~4×-per-round plan growth DOES need it) or a parquet-catalog
-    * write-read for executor-loss tolerance; output is
-    * pin-independent (LinkAnalysisSpec's catalog-pin test). */
+    * No round is pinned: at the declared fixed rounds (3) the
+    * per-round growth is one join + one aggregate — bounded lineage,
+    * and an eager per-round checkpoint measured a 2.3× slowdown on
+    * the q196 sibling for nothing (contrast
+    * [[graft.ops.Eval.kendallBySegmentScalable]], whose
+    * ~4×-per-round plan growth does need a pin). */
   def labelPropagation(pairs: DataFrame, rounds: Int = 3,
-                       aCol: String = "id_a", bCol: String = "id_b",
-                       pin: DataFrame => DataFrame = identity): DataFrame = {
+                       aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
     require(rounds >= 1, s"labelPropagation: rounds must be >= 1, got $rounds")
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
@@ -108,9 +103,9 @@ object LinkAnalysis {
         .join(labels.select(col("id").as("dst"), col("label")), Seq("dst"))
         .groupBy(col("src"), col("label"))
         .agg(count(lit(1)).as("cnt"))
-      labels = pin(votes.groupBy(col("src"))
+      labels = votes.groupBy(col("src"))
         .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l"))).as("m"))
-        .select(col("src").as("id"), col("m.l").as("label")))
+        .select(col("src").as("id"), col("m.l").as("label"))
     }
     labels
   }
@@ -155,14 +150,11 @@ object LinkAnalysis {
     * Cost: identical to [[pageRankFixed]] (per round: one edge⋈deg⋈
     * rank join chain + one map-side-combined sum) plus one broadcast
     * semi-join for the seed flag. `seeds` is an id frame; ids absent
-    * from the graph contribute nothing (they have no edges). Each
-    * round's rank frame goes through `pin` (default identity — see
-    * [[labelPropagation]]; pass `_.localCheckpoint(true)` or a
-    * catalog write-read at rounds ≫ 3, output is pin-independent). */
+    * from the graph contribute nothing (they have no edges). No round
+    * is pinned, as in [[labelPropagation]]. */
   def personalizedPageRank(pairs: DataFrame, seeds: DataFrame,
                            rounds: Int = 3, aCol: String = "id_a",
-                           bCol: String = "id_b",
-                           pin: DataFrame => DataFrame = identity): DataFrame = {
+                           bCol: String = "id_b"): DataFrame = {
     require(rounds >= 1,
       s"personalizedPageRank: rounds must be >= 1, got $rounds")
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
@@ -179,11 +171,11 @@ object LinkAnalysis {
         .join(deg, Seq("src"))
         .join(ranks.withColumnRenamed("id", "src"), Seq("src"))
         .select(col("dst"), expr("r div deg").as("c"))
-      ranks = pin(contrib.groupBy(col("dst"))
+      ranks = contrib.groupBy(col("dst"))
         .agg(sum(col("c")).as("s"))
         .join(seedFlag, col("dst") === col("sid"), "left")
         .select(col("dst").as("id"),
-          (teleport * 150000L + expr("(85 * s) div 100")).as("r")))
+          (teleport * 150000L + expr("(85 * s) div 100")).as("r"))
     }
     ranks.select(col("id"), col("r").as("rank_fixed"))
   }
@@ -205,13 +197,10 @@ object LinkAnalysis {
     * convergence wasn't reached. Cost per round: one map-side
     * degree aggregate + one semi-join of the edge list against the
     * surviving-node frame, both keyed on the id the edge list is
-    * already partitioned by. Each round's surviving edge list goes
-    * through `pin` (default identity — see [[labelPropagation]]; pass
-    * `_.localCheckpoint(true)` or a catalog write-read at rounds ≫ 3,
-    * output is pin-independent). */
+    * already partitioned by. No round is pinned, as in
+    * [[labelPropagation]]. */
   def kCore(pairs: DataFrame, k: Int, rounds: Int = 3,
-            aCol: String = "id_a", bCol: String = "id_b",
-            pin: DataFrame => DataFrame = identity): DataFrame = {
+            aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
     require(k >= 1 && rounds >= 1,
       s"kCore: k and rounds must be >= 1, got k=$k rounds=$rounds")
     var e = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
@@ -219,8 +208,8 @@ object LinkAnalysis {
     (1 to rounds).foreach { _ =>
       val keep = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src"))
-      e = pin(e.join(keep, Seq("src"))
-        .join(keep.select(col("src").as("dst")), Seq("dst")))
+      e = e.join(keep, Seq("src"))
+        .join(keep.select(col("src").as("dst")), Seq("dst"))
     }
     e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
   }

@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Pins
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -150,7 +151,7 @@ object Ann {
       // anyway — instead of paying a dedicated job per round
       // (measured: trainCodebooks' identical loop dropped ~1 s of
       // pure job overhead per iteration pair at sf0.1)
-      centroids = means.unionByName(kept).localCheckpoint(false)
+      centroids = Pins.pin(means.unionByName(kept), eager = false)
       i += 1
     }
     centroids

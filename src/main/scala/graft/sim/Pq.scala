@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Pins
 
 /** Product quantization (PQ) ANN — the memory lever BEYOND int8
   * ([[Quantize]]): split each d-dim vector into `m` contiguous
@@ -102,7 +103,7 @@ object Pq {
       // lazy: the next round's broadcast build (or the caller's final
       // consumer) materializes the blocks — same lineage truncation,
       // one fewer job per round (see Ann.lloydRounds)
-      centroids = means.unionByName(kept).localCheckpoint(false)
+      centroids = Pins.pin(means.unionByName(kept), eager = false)
       i += 1
     }
     val w = Window.partitionBy(col("block")).orderBy(col("cid"))
@@ -265,7 +266,7 @@ object Pq {
                    iters: Int = 2, idCol: String = "vec_id",
                    vecCol: String = "embedding"): Unit = {
     val cb = trainCodebooks(emb, m, k, dim, iters, idCol, vecCol)
-      .localCheckpoint(true) // encode consumes it twice (join + layout)
+      .transform(Pins.pin(_)) // encode consumes it twice (join + layout)
     catalog.overwrite(cb, s"${prefix}_codebooks")
     catalog.overwrite(encode(emb, cb, m, dim, idCol, vecCol),
       s"${prefix}_codes")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.catalog.TableCatalog
 import graft.dedup.Dedup
-import graft.ops.BloomGate
+import graft.ops.{BloomGate, Pins}
 import graft.text.TextFunctions
 
 /** The production ingest loop: one tick (a micro-batch from
@@ -138,8 +138,8 @@ object IngestLoop {
     require(catalog.supportsPartitionReplace,
       s"IngestLoop needs a catalog with partition-replace semantics; " +
         s"${catalog.getClass.getName} reports none")
-    val unique = withFp(Dedup.exactDedup(seed, st.idCol, st.textCol), st)
-      .localCheckpoint(true)
+    val unique = Pins.pin(
+      withFp(Dedup.exactDedup(seed, st.idCol, st.textCol), st))
     catalog.overwrite(unique, st.corpus)
     BloomGate.buildBloomIndex(unique, "__fp", catalog,
       st.bloom, expectedItems = st.bloomItems)
@@ -209,7 +209,7 @@ object IngestLoop {
     val survivors = BloomGate.newRows(
         withFp(Dedup.exactDedup(batch, st.idCol, st.textCol), st),
         corpus, "__fp", bloomRow.getAs[Array[Byte]]("bloom"))
-      .localCheckpoint(true) // gate once; every stage below consumes
+      .transform(Pins.pin(_)) // gate once; every stage below consumes
     // a tick of pure re-ingests mutates NOTHING — no staging, no
     // marker, no partition rewrites
     if (survivors.isEmpty) return survivors.drop("__fp")
@@ -222,15 +222,13 @@ object IngestLoop {
       Dedup.incrementalPairsFromCatalogWithProbe(
         setsOf(corpus, st), newSets, st.idCol, catalog, st.prefixIndex,
         knownThreshold = Some(st.threshold))
-    // pin the verified pairs once; the fold consumes them from four
-    // branches and is told they are already materialized
-    val pinnedPairs = deltaPairs.select("id_a", "id_b").localCheckpoint(true)
-    // delta-scale component fold: (old-root → merged-root) remap plus
-    // labeled new nodes; None when every delta edge dissolved into the
-    // standing clusters — but new SINGLETON docs still need no row
-    // (singletons are absent from the assignment, as in the batch form)
+    // delta-scale component fold, which pins the verified pairs itself:
+    // (old-root → merged-root) remap plus labeled new nodes; None when
+    // every delta edge dissolved into the standing clusters — but new
+    // SINGLETON docs still need no row (singletons are absent from the
+    // assignment, as in the batch form)
     val fold = Dedup.incrementalComponentsDelta(
-      readComponents(spark, catalog, st), pinnedPairs, pinned = true)
+      readComponents(spark, catalog, st), deltaPairs)
     // the FULL replacement content of every touched component
     // partition, computed NOW from the still-clean standing table —
     // recovery must never derive the touched set from a standing table

@@ -32,41 +32,6 @@ class KendallScalableSpec extends SparkTestBase {
     }
   }
 
-  test("catalog pin (cluster-scale reliable rounds) matches the default") {
-    // the executor-loss-tolerant deployment: each rank round lands in
-    // a parquet catalog and is read back, instead of localCheckpoint's
-    // executor-resident blocks — output must be pin-independent
-    val rows = for {
-      s <- Seq("a", "b"); i <- 0 until 37
-    } yield (s, i.toLong, ((i * 7) % 11).toLong, ((i * 5) % 7).toLong)
-    val df = rows.toDF("seg", "id", "x", "y")
-    val root = java.nio.file.Files.createTempDirectory("kendall_pin_")
-    try {
-      val cat = new graft.catalog.ParquetCatalog(root.toString)
-      var n = 0
-      val catalogPin: org.apache.spark.sql.DataFrame =>
-          org.apache.spark.sql.DataFrame = { d =>
-        n += 1
-        val t = s"kendall_round_$n"
-        cat.overwrite(d, t)
-        cat.read(spark, t)
-      }
-      val viaCatalog = Eval.kendallBySegmentScalable(df, "seg", "x",
-          "y", "id", 8, pin = catalogPin)
-        .orderBy("seg").collect().map(_.toSeq).toSeq
-      val viaDefault = Eval.kendallBySegmentScalable(df, "seg", "x",
-          "y", "id", 8)
-        .orderBy("seg").collect().map(_.toSeq).toSeq
-      assert(n >= 2, "the catalog pin was never exercised")
-      assert(viaCatalog == viaDefault)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).sorted(
-          java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-  }
-
   test("requireUniqueIds: duplicated ids fail loudly; unique ids unchanged") {
     val clean = Seq(("a", 1L, 3L, 5L), ("a", 2L, 1L, 2L), ("a", 3L, 4L, 4L),
       ("a", 4L, 2L, 1L)).toDF("seg", "id", "x", "y")

@@ -186,45 +186,4 @@ class LinkAnalysisSpec extends SparkTestBase {
     // a clique is regular: zero degree variance -> code 0
     assert(code(Seq((1L, 2L), (1L, 3L), (2L, 3L))) == ((6L, 0L)))
   }
-
-  test("catalog pin matches the default on all three round-loops") {
-    import org.apache.spark.sql.functions.col
-    // the executor-loss-tolerant deployment: each round's frame lands
-    // in a parquet catalog and is read back instead of
-    // localCheckpoint's executor-resident blocks — output must be
-    // pin-independent (KendallScalableSpec's discipline)
-    val pairs = Seq((1L, 2L), (1L, 3L), (2L, 3L),
-      (4L, 5L), (4L, 6L), (5L, 6L), (3L, 4L), (6L, 7L), (7L, 8L))
-      .toDF("id_a", "id_b")
-    val seeds = Seq(Tuple1(1L)).toDF("id")
-    val root = java.nio.file.Files.createTempDirectory("graph_pin_")
-    try {
-      val cat = new graft.catalog.ParquetCatalog(root.toString)
-      var n = 0
-      val catalogPin: org.apache.spark.sql.DataFrame =>
-          org.apache.spark.sql.DataFrame = { d =>
-        n += 1
-        val t = s"graph_round_$n"
-        cat.overwrite(d, t)
-        cat.read(spark, t)
-      }
-      def sorted(d: org.apache.spark.sql.DataFrame) =
-        d.orderBy(d.columns.map(col): _*).collect().map(_.toSeq).toSeq
-      assert(sorted(LinkAnalysis.labelPropagation(pairs, rounds = 3,
-        pin = catalogPin)) ==
-        sorted(LinkAnalysis.labelPropagation(pairs, rounds = 3)))
-      assert(sorted(LinkAnalysis.personalizedPageRank(pairs, seeds,
-        rounds = 3, pin = catalogPin)) ==
-        sorted(LinkAnalysis.personalizedPageRank(pairs, seeds, rounds = 3)))
-      assert(sorted(LinkAnalysis.kCore(pairs, k = 2, rounds = 3,
-        pin = catalogPin)) ==
-        sorted(LinkAnalysis.kCore(pairs, k = 2, rounds = 3)))
-      assert(n >= 9, s"the catalog pin was never exercised ($n)")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).sorted(
-          java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-  }
 }
