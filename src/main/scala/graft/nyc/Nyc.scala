@@ -41,7 +41,8 @@ object Nyc {
   /** Shared cleanse tail once the taxi-type specifics are normalized:
     * dedup → parse/rename timestamps → required non-null → casts →
     * total_surcharges → trip_duration (seconds) → fillna(0)
-    * (silver.py:67-86 for green, 125-140 for yellow, conformed). */
+    * (silver.py:67-86 for green, 125-140 for yellow, conformed). An
+    * input's `month_key` rides through, so dedup stays within a month. */
   private def cleanse(df: DataFrame, pickupSrc: String, dropoffSrc: String,
                       taxiType: String): DataFrame = {
     val renamed = Cleanse.rename(
@@ -62,8 +63,8 @@ object Nyc {
         + col("improvement_surcharge") + col("congestion_surcharge")),
       "trip_duration" ->
         Cleanse.durationSeconds(col("pickup_datetime"), col("dropoff_datetime")))
-    Cleanse.fillNumeric(
-      derived.select(canonicalColumns.map(col): _*), 0.0)
+    val kept = canonicalColumns ++ df.columns.filter(_ == "month_key")
+    Cleanse.fillNumeric(derived.select(kept.map(col): _*), 0.0)
   }
 
   /** Green cleanse: drops ehail_fee/store_and_fwd_flag/trip_type,

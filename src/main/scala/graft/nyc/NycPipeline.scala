@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{NullType, StructField, StructType}
 import graft.catalog.TableCatalog
-import graft.etl.{DateDim, Star}
+import graft.etl.Star
 import graft.ops.Pins
 import graft.sources.Sources
 
@@ -18,7 +18,9 @@ import graft.sources.Sources
   * Unit of work is one `yyyy-MM` FILE month (the raw file's name, not
   * the pickup month inside it — a January file legitimately carries a
   * few early-February pickups, and they stay in January's partition
-  * exactly as the reference's per-file processing leaves them). Every
+  * exactly as the reference's per-file processing leaves them). A run
+  * takes any set of months and writes each layer once for all of them
+  * ([[runYear]]; [[runMonth]] is its one-month case). Every
   * fact/silver/bronze write is a dynamic partition REPLACE on
   * `month_key`, so re-running any month is idempotent (the reference's
   * backfill semantics).
@@ -39,9 +41,7 @@ import graft.sources.Sources
 object NycPipeline {
   final case class Config(greenDir: String, catalog: TableCatalog,
                           yellowDir: Option[String] = None,
-                          zonePath: Option[String] = None,
-                          dateStart: String = "2023-01-01",
-                          dateEnd: String = "2023-12-31")
+                          zonePath: Option[String] = None)
 
   private val WmTable = "fact_nyc_watermark"
 
@@ -56,8 +56,9 @@ object NycPipeline {
     * the keys as int32 (measured across the real files). A bronze
     * table whose partitions carry different physical types fails at
     * scan time (parquet column-type mismatch against the inferred
-    * table schema), so ingest conforms every drifting column to its
-    * WIDEST observed type — lossless casts, applied per month, making
+    * table schema), and months of different types do not union, so
+    * ingest conforms every drifting column to its WIDEST observed
+    * type — lossless casts, applied per month, making every month and
     * the accumulated table one coherent schema. */
   private val conformTypes: Map[String, String] = Map(
     "VendorID" -> "bigint", "PULocationID" -> "bigint",
@@ -66,72 +67,53 @@ object NycPipeline {
     "trip_type" -> "double", "ehail_fee" -> "double",
     "congestion_surcharge" -> "double", "airport_fee" -> "double")
 
-  /** Verbatim monthly ingest into the catalog, type-conformed (see
-    * [[conformTypes]]); any NULL-typed column (all-null, pandas-
-    * written) is stabilized to double first — parquet cannot store a
-    * void column. Silver's cleanse re-casts what it keeps.
-    *
-    * Returns the conformed frames it wrote (without `month_key`),
-    * keyed by bronze table, for [[silverMonth]] to cleanse without
-    * reading the bronze table back. */
-  def bronzeMonth(spark: SparkSession, cfg: Config,
-                  month: String): Map[String, DataFrame] = {
-    def ingest(dir: String, table: String): (String, DataFrame) = {
-      val raw = spark.read.parquet(s"$dir/$month.parquet")
+  /** Verbatim ingest of `months` of one taxi type into `table` as ONE
+    * union write of the months' files, each type-conformed (see
+    * [[conformTypes]]; an unmapped NULL-typed column, all-null and
+    * pandas-written, becomes double — parquet cannot store a void
+    * column) and tagged with its `month_key`. Returns the union for
+    * silver to cleanse without reading the bronze table back. */
+  private def bronze(spark: SparkSession, cfg: Config, dir: String, table: String,
+                     months: Seq[String]): DataFrame = {
+    val all = months.map { month =>
+      val raw = Sources.readParquet(spark, s"$dir/$month.parquet")
       // conformTypes FIRST even for NULL-typed columns: an all-null
       // month of a conformed column must land as the conformed type,
-      // not double, or that partition's parquet type diverges from
-      // the rest of the accumulated table — the exact mismatch this
-      // function exists to prevent. Double is only the fallback for
-      // unmapped void columns (parquet cannot store NullType).
-      val stabilized = raw.schema.fields.foldLeft(raw.toDF()) { (df, f) =>
+      // or that month's type diverges from the rest of the table
+      raw.select(raw.schema.fields.toSeq.map { f =>
         conformTypes.get(f.name) match {
-          case Some(t) => df.withColumn(f.name, col(f.name).cast(t))
-          case None if f.dataType == NullType =>
-            df.withColumn(f.name, col(f.name).cast("double"))
-          case None => df
+          case Some(t) => col(f.name).cast(t).as(f.name)
+          case None if f.dataType == NullType => col(f.name).cast("double").as(f.name)
+          case None => col(f.name)
         }
-      }
-      cfg.catalog.replacePartitions(
-        stabilized.withColumn("month_key", lit(month)),
-        table, partitionBy = Seq("month_key"))
-      table -> stabilized
-    }
-    (ingest(cfg.greenDir, "bronze_green") +:
-      cfg.yellowDir.toSeq.map(ingest(_, "bronze_yellow"))).toMap
+      } :+ lit(month).as("month_key"): _*)
+    }.reduce(_.unionByName(_))
+    cfg.catalog.replacePartitions(all, table, partitionBy = Seq("month_key"))
+    all
   }
 
   // ------------------------------------------------------------- silver
 
-  /** Cleanse the month's bronze partitions to the canonical 17-column
-    * trip schema and union green + yellow BY NAME (R1 fix — the
-    * reference's positional union throws, gold.py:273). One conformed
-    * `silver_trips` table, partitioned by file month.
-    *
-    * `bronze` is what [[bronzeMonth]] returned for this month; a table
-    * missing from it is read back from the catalog, so called alone
-    * silver reads the bronze table. */
-  def silverMonth(spark: SparkSession, cfg: Config, month: String,
-                  bronze: Map[String, DataFrame] = Map.empty): Unit = {
-    def slice(table: String): DataFrame =
-      bronze.getOrElse(table, cfg.catalog.read(spark, table)
-        .filter(col("month_key") === month).drop("month_key"))
-    val green = Nyc.cleanseGreen(slice("bronze_green"))
-    val frames = green +: cfg.yellowDir.toSeq.map(_ =>
-      Nyc.cleanseYellow(slice("bronze_yellow")))
-    cfg.catalog.replacePartitions(
-      Nyc.unionTrips(frames).withColumn("month_key", lit(month)),
+  /** Bronze then silver for `months`, one write per table. Silver
+    * cleanses bronze's frames to the canonical 17-column trip schema
+    * plus `month_key` and unions green + yellow BY NAME (R1 fix — the
+    * reference's positional union throws, gold.py:273). */
+  def ingest(spark: SparkSession, cfg: Config, months: Seq[String]): Unit = {
+    val green = Nyc.cleanseGreen(bronze(spark, cfg, cfg.greenDir, "bronze_green", months))
+    val yellow = cfg.yellowDir.map(dir =>
+      Nyc.cleanseYellow(bronze(spark, cfg, dir, "bronze_yellow", months)))
+    cfg.catalog.replacePartitions(Nyc.unionTrips(green +: yellow.toSeq),
       "silver_trips", partitionBy = Seq("month_key"))
   }
 
   // --------------------------------------------------------------- gold
 
   /** Seed dimensions once (create_datamart.sql static inserts + the
-    * generated calendar), idempotently; the missing ones are written
-    * side by side. */
+    * reference's 2023 calendar), idempotently; the missing ones are
+    * written side by side. */
   private def ensureDims(spark: SparkSession, cfg: Config): Unit = {
     val missing = Seq[(String, SparkSession => DataFrame)](
-        "dim_date" -> (DateDim.build(_, cfg.dateStart, cfg.dateEnd)),
+        "dim_date" -> Nyc.dateDim2023,
         "dim_type" -> Nyc.seedTypes, "dim_vendor" -> Nyc.seedVendors,
         "dim_payment" -> Nyc.seedPayments, "dim_rate" -> Nyc.seedRates)
       .filterNot { case (table, _) => cfg.catalog.exists(spark, table) }
@@ -173,14 +155,10 @@ object NycPipeline {
   private def silverOf(spark: SparkSession, cfg: Config, months: Seq[String]): DataFrame =
     cfg.catalog.read(spark, "silver_trips").filter(col("month_key").isin(months: _*))
 
-  /** Rebuild-and-replace the month's fact partition — idempotent,
-    * watermark-independent (the reference's backfill unit). */
-  def goldMonth(spark: SparkSession, cfg: Config, month: String): Unit =
-    gold(spark, cfg, Seq(month))
-
   /** Dims seeded, then the upsert dims refreshed from the months'
     * silver BESIDE the fact write that replaces every month's fact
-    * partition — shared by [[goldMonth]] and [[runYear]]. The fact
+    * partition — idempotent and watermark-independent (the reference's
+    * backfill unit), shared by [[runYear]] and the append recovery. The fact
     * build reads only `dim_date` and `dim_type`, never an upsert dim,
     * so the two cannot observe each other. It has no shuffle and
     * `month_key` is the partition column, so one write covers any
@@ -262,26 +240,31 @@ object NycPipeline {
     * the append and dropping the marker — the month's partition may
     * hold zero, one, or (after an earlier naive retry) two copies of
     * an unknown batch. Rebuild the marked month from silver
-    * ([[goldMonth]] — idempotent, watermark-independent), then
+    * (the backfill's gold — idempotent, watermark-independent), then
     * re-derive the watermark as max(previous, month's calendar-
     * surviving pickups) so the fence never moves backwards, and drop
-    * the marker last (a crash inside recovery just reruns it). */
+    * the marker last (a crash inside recovery just reruns it). An
+    * unreadable or rowless marker is a crash inside the marker write,
+    * before any append: it is dropped with nothing to recover. */
   private def recoverPendingAppend(spark: SparkSession, cfg: Config): Unit = {
     if (cfg.catalog.exists(spark, PendingTable)) {
-      val m = cfg.catalog.read(spark, PendingTable).head().getString(0)
-      goldMonth(spark, cfg, m)
-      val monthMax = factWithPickup(spark, cfg, silverOf(spark, cfg, Seq(m)), None)
-        .agg(max(col("pickup_datetime")).as("max_pickup"))
-      val merged =
-        if (cfg.catalog.exists(spark, WmTable))
-          monthMax.unionByName(
-              cfg.catalog.read(spark, WmTable).select(col("max_pickup")))
-            .agg(max(col("max_pickup")).as("max_pickup"))
-        else monthMax
-      // merged reads WmTable lazily; materialize BEFORE overwriting it
-      // (overwrite would otherwise delete its own input mid-plan)
-      val pinned = Pins.pin(merged)
-      cfg.catalog.overwrite(pinned, WmTable)
+      val marked = scala.util.Try(
+        cfg.catalog.read(spark, PendingTable).head(1).headOption.map(_.getString(0)))
+      marked.toOption.flatten.foreach { m =>
+        gold(spark, cfg, Seq(m))
+        val monthMax = factWithPickup(spark, cfg, silverOf(spark, cfg, Seq(m)), None)
+          .agg(max(col("pickup_datetime")).as("max_pickup"))
+        val merged =
+          if (cfg.catalog.exists(spark, WmTable))
+            monthMax.unionByName(
+                cfg.catalog.read(spark, WmTable).select(col("max_pickup")))
+              .agg(max(col("max_pickup")).as("max_pickup"))
+          else monthMax
+        // merged reads WmTable lazily; materialize BEFORE overwriting it
+        // (overwrite would otherwise delete its own input mid-plan)
+        val pinned = Pins.pin(merged)
+        cfg.catalog.overwrite(pinned, WmTable)
+      }
       cfg.catalog.drop(spark, PendingTable)
     }
   }
@@ -291,8 +274,7 @@ object NycPipeline {
   /** Refresh both report marts off the accumulated fact (platinum.py:
     * 61-252), zones attached when a lookup CSV is configured; the two
     * mart writes run side by side. */
-  def platinum(spark: SparkSession, cfg: Config,
-               compat: Nyc.Compat = Nyc.Compat()): Unit = {
+  def platinum(spark: SparkSession, cfg: Config): Unit = {
     val fact = cfg.catalog.read(spark, "fact_nyc").drop("month_key")
     val dd = cfg.catalog.read(spark, "dim_date")
     val zones = cfg.zonePath.map(p =>
@@ -300,65 +282,42 @@ object NycPipeline {
     def withZones(df: DataFrame): DataFrame =
       zones.fold(df)(z => Nyc.attachZones(df, z))
     inPool(Seq(
-        "report_monthly" -> Nyc.monthlyReport(fact, dd, compat),
-        "report_weekly" -> Nyc.weeklyReport(fact, dd, compat))) {
+        "report_monthly" -> Nyc.monthlyReport(fact, dd),
+        "report_weekly" -> Nyc.weeklyReport(fact, dd))) {
       case (table, mart) => cfg.catalog.overwrite(withZones(mart), table)
     }
   }
 
   // -------------------------------------------------------------- runs
 
-  /** One month end-to-end — the reference user's "re-run March":
-    * idempotent partition rebuild plus mart refresh. */
-  def runMonth(spark: SparkSession, cfg: Config, month: String): Unit = {
-    silverMonth(spark, cfg, month, bronzeMonth(spark, cfg, month))
-    goldMonth(spark, cfg, month)
-    platinum(spark, cfg)
-  }
+  /** One month end-to-end — the reference user's "re-run March": the
+    * one-month case of [[runYear]], so an idempotent rebuild of the
+    * month's partitions in every layer plus a mart refresh. */
+  def runMonth(spark: SparkSession, cfg: Config, month: String): Unit =
+    runYear(spark, cfg, Seq(month))
 
-  /** A full backfill: every month through bronze and silver, then gold
-    * and platinum once for the whole set of months — the same tables,
-    * row for row, as [[runMonth]] over the months in order (the marts
-    * aggregate the whole fact, so refreshing them per month would
-    * recompute the same aggregation 12 times over growing input for no
-    * observable difference in the final tables; the reference, asset-
-    * driven, does refresh per partition — an orchestration cost, not a
-    * semantic one). Three phases:
-    *
-    *  1. Bronze → silver per month, months overlapped from a small
-    *     driver pool ([[inPool]]): each month writes only its own
-    *     `month_key` partitions (dynamic partition overwrite stages
-    *     per job), Spark's scheduler runs concurrent jobs, and the next
-    *     month's tasks back-fill executors idled by the current month's
-    *     straggler tail. Silver cleanses the conformed frames bronze
-    *     hands it rather than reading the bronze table back.
-    *  2. Gold once ([[goldMonth]]'s code over every month): the dims
-    *     seeded side by side, then the three upsert dims refreshed
-    *     from ONE scan of the months' silver while ONE fact write
-    *     replaces every month's partition. The final dim content is
-    *     identical to the sequential monthly upserts (novel keys are a
-    *     distinct set-difference against the seed, and the appended
-    *     row is a pure function of the key), and the fact build never
-    *     reads the upsert dims, so fact rows cannot observe the
-    *     batching.
-    *  3. Platinum once, its two mart writes side by side.
-    *
-    * [[runMonth]] and [[goldAppend]] keep the reference's per-month
-    * upsert cadence. */
+  /** A backfill of `months`: [[ingest]], then gold (the dims seeded,
+    * the upsert dims refreshed from ONE scan of the months' silver
+    * beside ONE fact write), then platinum, each table written once
+    * for all the months. Partition replace makes every table equal a
+    * month-by-month run's: novel dim keys are a set difference against
+    * the seed and the fact build never reads an upsert dim. The marts
+    * aggregate the whole fact, so one refresh at the end gives the
+    * tables per-month refreshes would (the reference, asset-driven,
+    * refreshes per partition — an orchestration cost, not a semantic
+    * one). */
   def runYear(spark: SparkSession, cfg: Config,
               months: Seq[String] = months2023): Unit = {
-    inPool(months)(m => silverMonth(spark, cfg, m, bronzeMonth(spark, cfg, m)))
+    ingest(spark, cfg, months)
     gold(spark, cfg, months)
     platinum(spark, cfg)
   }
 
-  /** Driver pool width: how many months are in flight at once (the
-    * dim, fact and mart writes the pool also overlaps number 2 to 5).
-    * A/B-measured on the 10× year (3 → 6 cut both gen and pipeline
-    * ~12%; 8 ≈ 6): each month-unit here is a short driver-planning +
-    * commit-bound job, so more in flight pays until driver-side
-    * planning serializes. On a real cluster, size it to the executor
-    * slack left by one month's write (the guide's 2-3-jobs advice). */
+  /** Driver pool width for independent writes run side by side: the
+    * missing seed dims, the dim upserts beside the fact, the two marts
+    * and [[NycScale.amplify]]'s months — short planning- and commit-
+    * bound jobs whose overlap fills executors one job's tail idles
+    * (6 was A/B-measured on the 10× year, 3 → 6 cutting ~12%). */
   private val PoolWidth = 6
 
   /** Run `f` over `items` from a fixed pool of [[PoolWidth]] driver

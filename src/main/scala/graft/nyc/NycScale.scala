@@ -28,9 +28,9 @@ object NycScale {
   /** Amplify `months` from `srcDir` into `dstDir` (one
     * `<month>.parquet` DIRECTORY per month — `spark.read.parquet`
     * treats it like the reference's single file). Months are
-    * independent single-write units, so they overlap from the
-    * backfill's driver pool (the same back-fill-the-straggler-tail
-    * rationale as [[NycPipeline.runYear]]). */
+    * independent single-write units, so they overlap from
+    * [[NycPipeline.inPool]]: the next month's tasks back-fill executors
+    * idled by the current month's straggler tail. */
   def amplify(spark: SparkSession, srcDir: String, dstDir: String,
               months: Seq[String], factor: Int): Unit =
     NycPipeline.inPool(months) { m =>

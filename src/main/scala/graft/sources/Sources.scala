@@ -1,6 +1,10 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.types.StructType
 
 /** File-format sources beyond parquet (reference S5: the taxi-zone CSV
@@ -60,4 +64,21 @@ object Sources {
     * loud failure a silent cast would hide. */
   def readParquetMerged(spark: SparkSession, paths: Seq[String]): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(paths: _*)
+
+  /** One parquet file, or a directory one writer filled, read with the
+    * schema of its footer (a directory's first visible part file) as
+    * Spark's own converter reads it under the session's SQL conf, top-
+    * level columns nullable like any file source's: the schema
+    * `spark.read.parquet` infers, without the job it runs to infer it. */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val file = if (!fs.getFileStatus(p).isDirectory) p
+      else fs.listStatus(p).map(_.getPath).filterNot(f => "_.".contains(f.getName.head)).minBy(_.getName)
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val footer = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
+    val schema = new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(footer)
+    spark.read.schema(StructType(schema.fields.map(_.copy(nullable = true)))).parquet(path)
+  }
 }

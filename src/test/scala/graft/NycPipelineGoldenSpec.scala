@@ -79,8 +79,7 @@ class NycPipelineGoldenSpec extends SparkTestBase {
     assume(available)
     val cfg = freshCfg()
     // January through the APPEND path: cold start, no watermark
-    NycPipeline.bronzeMonth(spark, cfg, "2023-01")
-    NycPipeline.silverMonth(spark, cfg, "2023-01")
+    NycPipeline.ingest(spark, cfg, Seq("2023-01"))
     NycPipeline.goldAppend(spark, cfg, "2023-01")
     assert(cfg.catalog.read(spark, "fact_nyc").count() == 68208L)
     // watermark = the exact max LOADED pickup timestamp — the January
@@ -92,8 +91,7 @@ class NycPipelineGoldenSpec extends SparkTestBase {
 
     // February: strictly-newer rows append once; 89 late arrivals
     // at/below the watermark drop by contract
-    NycPipeline.bronzeMonth(spark, cfg, "2023-02")
-    NycPipeline.silverMonth(spark, cfg, "2023-02")
+    NycPipeline.ingest(spark, cfg, Seq("2023-02"))
     NycPipeline.goldAppend(spark, cfg, "2023-02")
     val fact = cfg.catalog.read(spark, "fact_nyc")
     assert(fact.count() == 68208L + 64719L)
@@ -107,11 +105,9 @@ class NycPipelineGoldenSpec extends SparkTestBase {
       "rebuild, not a double append") {
     assume(available)
     val cfg = freshCfg()
-    NycPipeline.bronzeMonth(spark, cfg, "2023-01")
-    NycPipeline.silverMonth(spark, cfg, "2023-01")
+    NycPipeline.ingest(spark, cfg, Seq("2023-01"))
     NycPipeline.goldAppend(spark, cfg, "2023-01")
-    NycPipeline.bronzeMonth(spark, cfg, "2023-02")
-    NycPipeline.silverMonth(spark, cfg, "2023-02")
+    NycPipeline.ingest(spark, cfg, Seq("2023-02"))
     NycPipeline.goldAppend(spark, cfg, "2023-02")
     val wmBefore = cfg.catalog.read(spark, "fact_nyc_watermark")
       .head().get(0).toString
